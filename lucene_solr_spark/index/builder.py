@@ -5,17 +5,18 @@ The Spark-first re-expression of Lucene's indexing chain
 ingest; our version is set-at-a-time):
 
     transcripts
-      → with_doc_ids (dense rank over (conv_id, turn_idx))
-      → tokenize (Arrow pandas_udf, analysis/tokenizer.py)
+      → with_doc_ids (dense rank over (conv_id, turn_idx), one JVM column)
+      → tokenize (JVM regex_extract_all or split, analysis/tokenizer.py)
       → explode → groupBy(doc_id, term) [map-side partial agg]  = postings
       → groupBy(term)                                            = dictionary
       → per-doc length + SmallFloat byte (Arrow UDF)             = norms
       → collection stats (docCount = docs with >=1 token,
         sumTotalTermFreq — reference BM25Similarity.java:139-156)
 
-All hot paths are JVM-native (explode/groupBy aggregate with whole-stage
-codegen); Python appears only inside two Arrow-vectorized UDFs
-(tokenize, norm-byte quantization).
+Doc-id assignment, tokenization and the explode/groupBy aggregates are
+JVM-native (whole-stage codegen); the flat build's only Python is the
+Arrow-vectorized norm-byte quantization UDF. The segmented build
+(index/segments.py) crosses into Python once, to encode blocks.
 
 The compressed segment/block representation (SURVEY.md §7.1 step 3) is
 built on top of these tables in index/segments.py.
@@ -31,17 +32,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..analysis.tokenizer import tokenize
 from ..functions.smallfloat import int_to_byte4
 from .docid import with_doc_ids
 
-__all__ = ["IndexTables", "build_index", "tokenize_udf", "norm_byte_udf"]
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched StandardAnalyzer-subset tokenization."""
-    return texts.fillna("").map(tokenize)
+__all__ = ["IndexTables", "build_index", "analyzer_tokens", "norm_byte_udf"]
 
 
 @pandas_udf(T.IntegerType())
@@ -109,6 +103,21 @@ def simple_tokens(text_col: str):
     )
 
 
+_ANALYZERS = {"standard": standard_tokens, "simple": simple_tokens}
+
+
+def analyzer_tokens(analyzer: str, text_col: str = "text"):
+    """The JVM token-array column of ``analyzer`` over ``text_col``:
+    "standard" (pinned StandardAnalyzer-subset regex) or "simple"
+    (lowercase alnum split, SQL-reproducible)."""
+    if analyzer not in _ANALYZERS:
+        raise ValueError(
+            f"unknown analyzer {analyzer!r}; expected one of "
+            f"{', '.join(map(repr, _ANALYZERS))}"
+        )
+    return _ANALYZERS[analyzer](text_col)
+
+
 def tokenized_docs(
     transcripts: DataFrame,
     order_cols=("conv_id", "turn_idx"),
@@ -117,10 +126,11 @@ def tokenized_docs(
     analyzer: str = "standard",
     id_col: str | None = None,
 ):
-    """transcripts → (docs DataFrame with doc_id + tokens, order_cols).
+    """transcripts → (docs DataFrame with doc_id + tokens, order_cols,
+    ranged).
 
-    analyzer: "standard" (pinned StandardAnalyzer-subset, Arrow UDF) or
-    "simple" (JVM-native lowercase alnum split, SQL-reproducible).
+    analyzer: "standard" or "simple" (see analyzer_tokens); anything
+    else raises ValueError.
     id_col: name of a pre-existing dense doc id column to trust instead of
     assigning one (e.g. the documents table's own doc_id).
 
@@ -129,35 +139,18 @@ def tokenized_docs(
     with_doc_ids path) — downstream segment builds can then skip their
     own repartitionByRange shuffle.
     """
-    tok_col = {
-        "simple": simple_tokens,
-        "standard": standard_tokens,  # JVM regex — the production path
-    }.get(analyzer)
+    tokens = analyzer_tokens(analyzer, text_col)
     if id_col is not None:
         docs = transcripts if id_col == "doc_id" else transcripts.withColumnRenamed(
             id_col, "doc_id"
         )
         order_cols = ("doc_id",)
         ranged = False
-        if tok_col is not None:
-            docs = docs.withColumn("tokens", tok_col(text_col))
-        else:
-            docs = docs.withColumn("tokens", tokenize_udf(F.col(text_col)))
     else:
         order_cols = tuple(order_cols)
         ranged = True
-        if tok_col is not None:
-            docs = with_doc_ids(transcripts, order_cols, num_partitions).withColumn(
-                "tokens", tok_col(text_col)
-            )
-        else:
-            # "standard_py": Python reference analyzer, fused with the
-            # id-assign pass (ONE Python stage — see with_doc_ids)
-            docs = with_doc_ids(
-                transcripts, order_cols, num_partitions,
-                tokenizer=tokenize, text_col=text_col,
-            )
-    return docs, order_cols, ranged
+        docs = with_doc_ids(transcripts, order_cols, num_partitions)
+    return docs.withColumn("tokens", tokens), order_cols, ranged
 
 
 def build_index(

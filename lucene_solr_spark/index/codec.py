@@ -32,6 +32,7 @@ __all__ = [
     "decode_payload",
     "decode_payloads",
     "encode_posting_blocks",
+    "encode_blocks_table",
     "decode_block",
     "decode_positions",
     "impacts_frontier",
@@ -454,4 +455,43 @@ def encode_posting_blocks_batch(
         block_term, first_doc, last_doc, counts.astype(np.int64), sum_freq,
         docs_bytes, freqs_bytes, norms_bytes, impact_freqs, impact_norms,
         pos_bytes,
+    )
+
+
+def encode_blocks_table(terms, term_codes, doc_ids, freqs, norm_bytes,
+                        positions=None, **keys):
+    """Postings sorted by (term_code, doc_id) → the posting-block Arrow
+    table, one row per block (encode_posting_blocks_batch). ``terms`` maps
+    a code to its term; each of ``keys`` (seg_id, or term_bucket and
+    seg_group) becomes an int32 column constant over the table, placed
+    after ``term`` in the order given. The segment build and the merge
+    both write their blocks through this one function."""
+    import pyarrow as pa
+
+    (bt, first, last, nd, sf, db, fb, nb, impf, impn, pb) = encode_posting_blocks_batch(
+        term_codes, doc_ids, freqs, norm_bytes, positions=positions
+    )
+
+    def list_arr(parts):
+        lens = np.fromiter((len(p) for p in parts), dtype=np.int64, count=len(parts))
+        off = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
+        vals = np.concatenate(parts).astype(np.int32) if parts else np.empty(0, np.int32)
+        return pa.ListArray.from_arrays(pa.array(off, pa.int32()), pa.array(vals, pa.int32()))
+
+    n = len(bt)
+    return pa.table(
+        {
+            "term": pa.array(np.asarray(terms, dtype=object)[bt], pa.string()),
+            **{k: pa.array(np.full(n, v, np.int32), pa.int32()) for k, v in keys.items()},
+            "first_doc": pa.array(first, pa.int64()),
+            "last_doc": pa.array(last, pa.int64()),
+            "n_docs": pa.array(nd.astype(np.int32), pa.int32()),
+            "sum_freq": pa.array(sf.astype(np.int64), pa.int64()),
+            "docs": pa.array(db, pa.binary()),
+            "freqs": pa.array(fb, pa.binary()),
+            "norms": pa.array(nb, pa.binary()),
+            "impact_freqs": list_arr(impf),
+            "impact_norms": list_arr(impn),
+            "positions": pa.array(pb, pa.binary()),
+        }
     )

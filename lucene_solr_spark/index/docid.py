@@ -11,21 +11,32 @@ single partition — unusable at 10^12 rows. Instead we:
 1. range-repartition on the sort key (distributed sort),
 2. count rows per partition (tiny driver-side prefix sum — one value per
    partition, NOT per row),
-3. add ``offset[pid] + local_index`` via ``mapInPandas`` (narrow, Arrow).
+3. add ``offsets[pid] + local_index`` as one JVM column:
+   ``offsets[spark_partition_id()] + monotonically_increasing_id()
+   - (spark_partition_id() << 33)``, the offsets a literal array.
+   ``monotonically_increasing_id`` is ``(pid << 33) + row number within
+   the partition``, so subtracting ``pid << 33`` leaves the local index.
+   No row crosses into Python.
 
 Partition boundaries from range-partition sampling don't affect the ids:
 each partition holds a contiguous, disjoint key range, so
 offset + local rank == global rank regardless of where boundaries fall.
 Requires the sort key to be unique (ours is: (conv_id, turn_idx)).
+
+Union safety: both ``spark_partition_id`` and
+``monotonically_increasing_id`` are bound to the partition index of the
+projection that evaluates them, i.e. of the persisted range-partitioned
+child — the same index the count job grouped by. A Union above the
+projection renumbers its own output partitions but not the child's, so
+the ids are the same standalone or as any input of a Union.
 """
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark import TaskContext
+from itertools import accumulate
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 __all__ = ["with_doc_ids"]
 
@@ -35,18 +46,13 @@ def with_doc_ids(
     order_cols=("conv_id", "turn_idx"),
     num_partitions: int | None = None,
     id_col: str = "doc_id",
-    tokenizer=None,
-    text_col: str = "text",
-    tokens_col: str = "tokens",
     cache_registry: list | None = None,
 ) -> DataFrame:
     """Return df + dense int64 ``id_col`` ranking rows by ``order_cols``.
 
-    tokenizer: optional callable(str) -> [token]. When given, a
-    ``tokens_col`` column is computed INSIDE the same mapInPandas pass —
-    one Python stage instead of two (id-assign + tokenize UDF would
-    otherwise each cross the JVM↔Arrow↔Python boundary, and on a
-    fully-subscribed local[N] box the extra worker wave is pure loss).
+    The range-partitioned, sorted input is persisted (the count job and
+    the id projection must see the same partitions); every consumer of
+    the result reads that cache through a cheap projection.
 
     cache_registry: if given, the internally persisted DataFrame is
     appended so a long-running caller (the NRT stream builds ids every
@@ -64,31 +70,8 @@ def with_doc_ids(
         .collect()
     )
     by_pid = {r["pid"]: r["count"] for r in counts}
-    offsets = {}
-    acc = 0
-    for pid in range(n):
-        offsets[pid] = acc
-        acc += by_pid.get(pid, 0)
-    offsets_bc = spark.sparkContext.broadcast(offsets)
-
-    extra = [T.StructField(id_col, T.LongType(), False)]
-    if tokenizer is not None:
-        extra.append(T.StructField(tokens_col, T.ArrayType(T.StringType()), False))
-    out_schema = T.StructType(list(ordered.schema.fields) + extra)
-
-    def assign(batches):
-        pid = TaskContext.get().partitionId()
-        base = offsets_bc.value[pid]
-        seen = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[id_col] = np.arange(base + seen, base + seen + len(pdf))
-            seen += len(pdf)
-            if tokenizer is not None:
-                pdf[tokens_col] = pdf[text_col].fillna("").map(tokenizer)
-            yield pdf
-
-    # materialization happens lazily; caller controls persistence. The
-    # ordered cache stays alive for the mapInPandas pass (an explicit
-    # unpersist here would re-trigger the range sampling).
-    return ordered.mapInPandas(assign, schema=out_schema)
+    offsets = [0, *accumulate(by_pid.get(pid, 0) for pid in range(n - 1))]
+    pid = F.spark_partition_id()
+    local = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    offset = F.array(*[F.lit(o).cast("long") for o in offsets])[pid]
+    return ordered.withColumn(id_col, offset + local)

@@ -8,17 +8,18 @@ list at 10^12-doc scale is far too large for one reducer.
 
 The salt is STRUCTURAL, not random: the shuffle key is
 ``(term_bucket, seg_group)`` where ``seg_group = seg_id //
-seg_group_size``. Segments hold contiguous disjoint doc-id ranges
-(range-partitioned), so each group's postings are a contiguous doc-range
-slice of a term's final posting list: reducers re-encode their slice
-into optimal 128-posting blocks independently, no cross-group
-coordination, and the concatenation of groups (ordered by first_doc) IS
-the merged list. Per-reducer work is bounded by seg_group_size segments
+seg_group_size``. Segments hold disjoint doc ids (range-partitioned),
+so each group's postings are a disjoint slice of a term's final posting
+list (a contiguous doc range unless a resumed build numbered its new
+segments past the committed ones): reducers re-encode their slice into
+optimal 128-posting blocks independently, no cross-group coordination,
+and the union of groups IS the merged list. Per-reducer work is bounded
+by seg_group_size segments
 regardless of a term's total df — hot-term skew is defused by
 construction (the explicit analog of AQE skew-split, which stays on as a
 backstop). Grouping by term_bucket (not term) keeps reducer count
 bounded and lets the whole group be re-encoded in one vectorized
-multi-term pass (codec.encode_posting_blocks_batch) instead of one
+multi-term pass (codec.encode_blocks_table) instead of one
 Python invocation per term.
 
 term_bucket = h60(term) mod n_buckets (the md5-derived portable hash) —
@@ -45,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.hashing import h60
-from .codec import decode_payloads, decode_vints, encode_posting_blocks_batch
+from .codec import decode_payloads, decode_vints, encode_blocks_table
 
 __all__ = ["merge_segments", "MERGED_POSTING_SCHEMA", "term_bucket_col"]
 
@@ -77,8 +78,9 @@ def _merge_group(tbl: pa.Table) -> pa.Table:
     """All segment blocks of one (term_bucket, seg_group), as an Arrow
     table: batch-decode, concatenate per term in doc order, batch
     re-encode into 128-posting blocks. Segments are disjoint doc ranges,
-    so sorting blocks by (term, first_doc) yields globally sorted
-    postings per term. Arrow end-to-end — term codes via C++
+    so sorting blocks by (term, first_doc) yields sorted postings per
+    term unless a resumed segment surrounds a committed one; then the
+    postings are sorted by (term, doc). Arrow end-to-end — term codes via C++
     dictionary_encode, block payloads batch-decoded per payload class
     (one varint pass over concatenated varint bodies; one
     unpackbits+matmul per distinct FOR bit width — codec.decode_payloads)."""
@@ -110,7 +112,7 @@ def _merge_group(tbl: pa.Table) -> pa.Table:
     # streams once, rebuild absolutes per posting, re-encode under the
     # new block boundaries. Input blocks arrive sorted by (term,
     # first_doc) and postings within a block are doc-ascending, so the
-    # concatenated occurrence stream is already in final posting order.
+    # concatenated occurrence stream follows the decoded posting order.
     positions = None
     pos_concat = _concat_bin("positions")
     if len(pos_concat):
@@ -120,38 +122,22 @@ def _merge_group(tbl: pa.Table) -> pa.Table:
         pcs = np.cumsum(pos_gaps)
         pbase = np.repeat(pcs[pstarts] - pos_gaps[pstarts], freqs)
         positions = pcs - pbase
-    (bt, first, last, nd, sf, db, fb, nb, impf, impn, pb) = encode_posting_blocks_batch(
-        flat_codes, docs, freqs, norms, positions=positions
-    )
-    def _list_arr(parts):
-        lens = np.fromiter((len(p) for p in parts), dtype=np.int64, count=len(parts))
-        off = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
-        vals = (
-            np.concatenate(parts).astype(np.int32)
-            if parts
-            else np.empty(0, np.int32)
-        )
-        return pa.ListArray.from_arrays(
-            pa.array(off, pa.int32()), pa.array(vals, pa.int32())
-        )
-
-    nblk = len(bt)
-    return pa.table(
-        {
-            "term": pa.array(uniques[bt], pa.string()),
-            "term_bucket": pa.array(np.full(nblk, bucket, np.int32), pa.int32()),
-            "seg_group": pa.array(np.full(nblk, seg_group, np.int32), pa.int32()),
-            "first_doc": pa.array(first, pa.int64()),
-            "last_doc": pa.array(last, pa.int64()),
-            "n_docs": pa.array(nd.astype(np.int32), pa.int32()),
-            "sum_freq": pa.array(sf.astype(np.int64), pa.int64()),
-            "docs": pa.array(db, pa.binary()),
-            "freqs": pa.array(fb, pa.binary()),
-            "norms": pa.array(nb, pa.binary()),
-            "impact_freqs": _list_arr(impf),
-            "impact_norms": _list_arr(impn),
-            "positions": pa.array(pb, pa.binary()),
-        }
+    # a resumed build can write a segment holding docs on both sides of a
+    # committed one; merged in one group, their blocks overlap and the
+    # (term, first_doc) block order leaves a term's postings unsorted
+    if np.any((flat_codes[1:] == flat_codes[:-1]) & (docs[1:] < docs[:-1])):
+        order = np.lexsort((docs, flat_codes))
+        if positions is not None:
+            nf = freqs[order]
+            new_starts = np.cumsum(nf) - nf
+            positions = positions[
+                np.repeat(pstarts[order] - new_starts, nf) + np.arange(nf.sum())
+            ]
+        flat_codes, docs = flat_codes[order], docs[order]
+        freqs, norms = freqs[order], norms[order]
+    return encode_blocks_table(
+        uniques, flat_codes, docs, freqs, norms, positions=positions,
+        term_bucket=bucket, seg_group=seg_group,
     )
 
 

@@ -11,10 +11,14 @@ doc-id-range-partitioned corpus builds one immutable segment:
     stored/                               stored fields (pure-JVM write)
 
 The manifest is written LAST via tmp+rename (the Lucene commit-point /
-Solr UpdateLog-replay analog — IndexWriter.java:3407, UpdateLog.java:96):
-a rerun skips partitions whose manifest exists, so the build resumes
-from per-partition checkpoints. Segment contents are deterministic
-(range partitioning over unique doc ids), so resume == fresh build.
+Solr UpdateLog-replay analog — IndexWriter.java:3407, UpdateLog.java:96).
+A rerun into the same directory resumes: the driver reads the committed
+manifests, leaves out every doc whose doc_id lies in a committed
+[min_doc, max_doc] range, and builds the rest as new segments numbered
+past the highest committed one. Doc ids depend only on the corpus (not
+on where range-partition sampling puts its boundaries, which moves
+between runs), so the resumed index holds the same postings as a fresh
+build, split into different segments.
 
 Block rows carry the norm byte of every posting inline (norms binary),
 making query-time scoring block-local — no norms join per query; this is
@@ -24,18 +28,19 @@ the analog of Lucene reading .nvd norms during per-segment scoring.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
-import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..functions.smallfloat import int_to_byte4
 from .builder import tokenized_docs
 from .codec import CODEC_FORMAT
 
@@ -63,34 +68,6 @@ MANIFEST_SCHEMA = T.StructType(
     ]
 )
 
-_POSTING_COLS = [
-    "term", "seg_id", "first_doc", "last_doc", "n_docs",
-    "sum_freq", "docs", "freqs", "norms", "impact_freqs", "impact_norms",
-    "positions",
-]
-
-
-def _postings_pa_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("term", pa.string()),
-            ("seg_id", pa.int32()),
-            ("first_doc", pa.int64()),
-            ("last_doc", pa.int64()),
-            ("n_docs", pa.int32()),
-            ("sum_freq", pa.int64()),
-            ("docs", pa.binary()),
-            ("freqs", pa.binary()),
-            ("norms", pa.binary()),
-            ("impact_freqs", pa.list_(pa.int32())),
-            ("impact_norms", pa.list_(pa.int32())),
-            ("positions", pa.binary()),
-        ]
-    )
-
-
 def _encode_segment_arrow(tbl, seg_id: int, index_positions: bool = False):
     """One segment's Arrow table (doc_id, tokens, stored…) → (postings
     pa.Table, norms pa.Table, counters). All heavy steps are Arrow C++ /
@@ -99,13 +76,13 @@ def _encode_segment_arrow(tbl, seg_id: int, index_positions: bool = False):
     - list lengths via offsets diff,
     - term→code via pyarrow dictionary_encode (C++ hash),
     - (code, doc) sort + run-length → freqs,
-    - block encode via codec.encode_posting_blocks_batch,
-    - impacts emitted as one ListArray built from concatenated buffers.
+    - block encode via codec.encode_blocks_table (shared with the merge).
     """
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from ..functions.smallfloat import int_to_byte4
-    from .codec import encode_posting_blocks_batch
+    from .codec import encode_blocks_table
 
     doc_ids = tbl.column("doc_id").to_numpy()
     toks = tbl.column("tokens")
@@ -123,8 +100,8 @@ def _encode_segment_arrow(tbl, seg_id: int, index_positions: bool = False):
         }
     )
     if int(lengths.sum()) == 0:
-        empty = _postings_pa_schema().empty_table()
-        return empty, norms_tbl, {
+        nil = np.empty(0, np.int64)
+        return encode_blocks_table([], nil, nil, nil, nil, seg_id=seg_id), norms_tbl, {
             "doc_count": 0, "sum_ttf": 0, "n_terms": 0, "n_postings": 0,
             "posting_bytes": 0,
         }
@@ -151,125 +128,20 @@ def _encode_segment_arrow(tbl, seg_id: int, index_positions: bool = False):
     rs = np.nonzero(run_start)[0]
     tf_freqs = np.diff(np.append(rs, len(c_s)))
 
-    (bt, first, last, nd, sf, db, fb, nb, impf, impn, pb) = encode_posting_blocks_batch(
-        c_s[rs], d_s[rs], tf_freqs, n_s[rs],
-        positions=(p_s if index_positions else None),
-    )
-
-    def _list_arr(parts):
-        lens = np.fromiter((len(p) for p in parts), dtype=np.int64, count=len(parts))
-        off = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
-        vals = (
-            np.concatenate(parts).astype(np.int32)
-            if parts
-            else np.empty(0, np.int32)
-        )
-        return pa.ListArray.from_arrays(
-            pa.array(off, pa.int32()), pa.array(vals, pa.int32())
-        )
-
-    postings_tbl = pa.table(
-        {
-            "term": pa.array(uniques[bt], pa.string()),
-            "seg_id": pa.array(np.full(len(bt), seg_id, np.int32), pa.int32()),
-            "first_doc": pa.array(first, pa.int64()),
-            "last_doc": pa.array(last, pa.int64()),
-            "n_docs": pa.array(nd.astype(np.int32), pa.int32()),
-            "sum_freq": pa.array(sf.astype(np.int64), pa.int64()),
-            "docs": pa.array(db, pa.binary()),
-            "freqs": pa.array(fb, pa.binary()),
-            "norms": pa.array(nb, pa.binary()),
-            "impact_freqs": _list_arr(impf),
-            "impact_norms": _list_arr(impn),
-            "positions": pa.array(pb, pa.binary()),
-        }
+    postings_tbl = encode_blocks_table(
+        uniques, c_s[rs], d_s[rs], tf_freqs, n_s[rs],
+        positions=(p_s if index_positions else None), seg_id=seg_id,
     )
     counters = {
         "doc_count": int((lengths > 0).sum()),
         "sum_ttf": int(lengths.sum()),
         "n_terms": int(len(uniques)),
         "n_postings": int(len(rs)),
-        "posting_bytes": int(sum(len(b) for b in db) + sum(len(b) for b in fb)),
+        "posting_bytes": sum(
+            pc.sum(pc.binary_length(postings_tbl[c])).as_py() for c in ("docs", "freqs")
+        ),
     }
     return postings_tbl, norms_tbl, counters
-
-
-def _segment_postings(
-    pdf: pd.DataFrame, seg_id: int, index_positions: bool = False
-) -> tuple:
-    """One segment's docs (doc_id, tokens) → (postings pdf, norms pdf, counters)."""
-    doc_ids = pdf["doc_id"].to_numpy()
-    tokens = pdf["tokens"].tolist()
-    lengths = np.fromiter((len(t) for t in tokens), dtype=np.int64, count=len(tokens))
-    norm_bytes = int_to_byte4(lengths)
-    norms_pdf = pd.DataFrame(
-        {"doc_id": doc_ids, "dl": lengths.astype(np.int32),
-         "norm_byte": norm_bytes.astype(np.int32), "seg_id": np.int32(seg_id)}
-    )
-    if lengths.sum() == 0:
-        return (
-            pd.DataFrame(columns=_POSTING_COLS),
-            norms_pdf,
-            {"doc_count": 0, "sum_ttf": 0, "n_terms": 0, "n_postings": 0},
-        )
-    flat_docs = np.repeat(doc_ids, lengths)
-    flat_norms = np.repeat(norm_bytes, lengths)
-    flat_terms = np.concatenate([np.asarray(t, dtype=object) for t in tokens if len(t)])
-    doc_tok_starts = np.zeros(len(lengths), dtype=np.int64)
-    np.cumsum(lengths[:-1], out=doc_tok_starts[1:])
-    flat_pos = np.arange(int(lengths.sum()), dtype=np.int64) - np.repeat(
-        doc_tok_starts, lengths
-    )
-    # (term, doc) freq: factorize + lexsort + run-length (all C-level)
-    codes, uniques = pd.factorize(flat_terms, sort=True)
-    order = np.lexsort((flat_docs, codes))
-    c_s, d_s, n_s = codes[order], flat_docs[order], flat_norms[order]
-    p_s = flat_pos[order]
-    run_start = np.empty(len(c_s), dtype=bool)
-    run_start[0] = True
-    run_start[1:] = (c_s[1:] != c_s[:-1]) | (d_s[1:] != d_s[:-1])
-    rs = np.nonzero(run_start)[0]
-    tf_codes, tf_docs, tf_norms = c_s[rs], d_s[rs], n_s[rs]
-    tf_freqs = np.diff(np.append(rs, len(c_s)))
-    postings_pdf = _blocks_to_pdf(
-        uniques, tf_codes, tf_docs, tf_freqs, tf_norms, seg_id,
-        positions=(p_s if index_positions else None),
-    )
-    counters = {
-        "doc_count": int((lengths > 0).sum()),
-        "sum_ttf": int(lengths.sum()),
-        "n_terms": int(len(uniques)),
-        "n_postings": int(len(rs)),
-    }
-    return postings_pdf, norms_pdf, counters
-
-
-def _blocks_to_pdf(
-    uniques, tf_codes, tf_docs, tf_freqs, tf_norms, seg_id, positions=None
-):
-    """Batch-encode (term-sorted) postings into the segment block frame."""
-    from .codec import encode_posting_blocks_batch
-
-    (bt, first, last, nd, sf, db, fb, nb, impf, impn, pb) = encode_posting_blocks_batch(
-        tf_codes, tf_docs, tf_freqs, tf_norms, positions=positions
-    )
-    return pd.DataFrame(
-        {
-            "term": np.asarray(uniques, dtype=object)[bt],
-            "seg_id": np.int32(seg_id),
-            "first_doc": first,
-            "last_doc": last,
-            "n_docs": nd.astype(np.int32),
-            "sum_freq": sf,
-            "docs": db,
-            "freqs": fb,
-            "norms": nb,
-            "impact_freqs": [x.tolist() for x in impf],
-            "impact_norms": [x.tolist() for x in impn],
-            "positions": pb,
-        },
-        columns=_POSTING_COLS,
-    )
 
 
 def build_segments(
@@ -283,15 +155,18 @@ def build_segments(
     manifest_extra: dict | None = None,
 ) -> list:
     """Range-partition docs (doc_id, tokens, …) into segments and write
-    each partition's segment files; resumable via manifests.
+    each partition's segment files, each committed by its manifest.
 
     already_ranged: the input partitions are already contiguous disjoint
     doc_id ranges in partition order (the with_doc_ids pipeline) — skip
     the redundant range shuffle and build one segment per partition.
-    fail_on_seg: test hook — raise inside that segment (crash injection).
+    fail_on_seg: crash-injection test hook — that segment writes nothing
+    and the build raises after the job, so every other segment has
+    committed and no task is still writing.
     seg_id_base: offset added to the partition id when naming segments —
-    lets an incremental (NRT) build append new segments after existing
-    ones (the Lucene SegmentInfos counter analog, index/SegmentInfos.java).
+    lets an incremental (NRT) or resumed build append new segments after
+    committed ones (the Lucene SegmentInfos counter analog,
+    index/SegmentInfos.java).
     manifest_extra: extra key/values persisted into each manifest.json
     (e.g. the streaming batch_id for lineage) — not part of the returned
     Arrow manifest rows.
@@ -311,65 +186,17 @@ def build_segments(
             num_segments, "doc_id"
         ).sortWithinPartitions("doc_id")
 
+    manifest_schema = to_arrow_schema(MANIFEST_SCHEMA)
+
     def write_segment(batches):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        def manifest_batch(m):
-            return pa.RecordBatch.from_pylist(
-                [{f.name: m.get(f.name) for f in MANIFEST_SCHEMA.fields}],
-                schema=pa.schema(
-                    [
-                        ("seg_id", pa.int32()),
-                        ("n_docs", pa.int64()),
-                        ("doc_count", pa.int64()),
-                        ("sum_ttf", pa.int64()),
-                        ("n_terms", pa.int64()),
-                        ("n_postings", pa.int64()),
-                        ("posting_bytes", pa.int64()),
-                        ("min_doc", pa.int64()),
-                        ("max_doc", pa.int64()),
-                        ("wall_sec", pa.float64()),
-                        ("resumed", pa.bool_()),
-                    ]
-                ),
-            )
-
         t0 = time.time()
         seg_id = seg_id_base + TaskContext.get().partitionId()
         seg_dir = f"{index_dir}/segments/seg-{seg_id:05d}"
-        manifest_path = f"{seg_dir}/manifest.json"
-        if os.path.exists(manifest_path):  # checkpoint hit: skip rebuild
-            with open(manifest_path) as f:
-                m = json.load(f)
-            seg_codec = m.pop("codec", "<none: pre-payload varint format>")
-            if seg_codec != CODEC_FORMAT:
-                raise ValueError(
-                    f"segment {seg_id} at {seg_dir} uses codec "
-                    f"{seg_codec!r}, this build writes {CODEC_FORMAT!r}; "
-                    "delete the index dir and rebuild"
-                )
-            m["resumed"] = True
-            for _ in batches:  # drain without building
-                pass
-            yield manifest_batch(m)
+        if seg_id == fail_on_seg:
             return
-        if fail_on_seg is not None and seg_id == fail_on_seg:
-            # Crash-injection test hook. Wait for at least one sibling
-            # segment to commit so the partial-build state is deterministic
-            # (the job abort otherwise races the sibling tasks' manifests).
-            deadline = time.time() + 60
-            while time.time() < deadline:
-                others = [
-                    s
-                    for s in os.listdir(f"{index_dir}/segments")
-                    if s != f"seg-{seg_id:05d}"
-                    and os.path.exists(f"{index_dir}/segments/{s}/manifest.json")
-                ]
-                if others:
-                    break
-                time.sleep(0.2)
-            raise RuntimeError(f"injected failure in segment {seg_id}")
         chunks = [pa.Table.from_batches([b]) for b in batches]
         if not chunks:
             return
@@ -404,11 +231,33 @@ def build_segments(
         tmp = f"{seg_dir}/.manifest.json.tmp"
         with open(tmp, "w") as f:
             json.dump({**m, **(manifest_extra or {}), "codec": CODEC_FORMAT}, f)
-        os.replace(tmp, manifest_path)  # commit point
-        yield manifest_batch(m)
+        os.replace(tmp, f"{seg_dir}/manifest.json")  # commit point
+        yield pa.RecordBatch.from_pylist([m], schema=manifest_schema)
 
     manifests = part.mapInArrow(write_segment, schema=MANIFEST_SCHEMA).collect()
+    if fail_on_seg is not None and (
+        0 <= fail_on_seg - seg_id_base < part.rdd.getNumPartitions()
+    ):
+        raise RuntimeError(f"injected failure in segment {fail_on_seg}")
     return [r.asDict() for r in manifests]
+
+
+def _committed_manifests(index_dir: str, segments: list) -> list:
+    """The manifests of committed ``segments``, read on the driver and
+    marked resumed. A segment of another codec fails here, before any
+    job runs."""
+    out = []
+    for seg in segments:
+        with open(f"{index_dir}/segments/{seg}/manifest.json") as f:
+            m = json.load(f)
+        found = m.pop("codec", "<none: pre-payload varint format>")
+        if found != CODEC_FORMAT:
+            raise ValueError(
+                f"segment {seg} under {index_dir} uses codec {found!r}, this "
+                f"build writes {CODEC_FORMAT!r}; delete the index dir and rebuild"
+            )
+        out.append({**m, "resumed": True})
+    return out
 
 
 @dataclass
@@ -449,6 +298,11 @@ def build_segmented_index(
     """Full pipeline: tokenize → per-partition segments (checkpointed) →
     salted merge → merged tables on disk → readable index.
 
+    Resume: a rerun into an index_dir holding committed segments (a
+    crashed build's) keeps them, leaves their [min_doc, max_doc] ranges
+    out and builds only the remaining docs, as segments numbered past
+    the highest committed seg_id.
+
     index_positions: also store within-doc token positions in the
     posting blocks (the DOCS_AND_FREQS_AND_POSITIONS IndexOptions analog
     — reference: index/IndexOptions.java, Lucene50PostingsFormat .pos) —
@@ -465,12 +319,32 @@ def build_segmented_index(
     num_segments = num_segments or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
+    committed = _committed_manifests(index_dir, committed_segments(index_dir))
     docs, order_cols, ranged = tokenized_docs(
         transcripts, order_cols, text_col, num_segments, analyzer, id_col
     )
+    pending, seg_id_base = docs, 0
+    if committed:
+        # doc ids depend only on the corpus, and a segment holds every
+        # doc of its [min_doc, max_doc] range that no segment committed
+        # before it holds, so the union of committed ranges names exactly
+        # the committed docs, whatever boundaries this run's range
+        # sampling picked. Adjacent or overlapping ranges are joined:
+        # after one crash, one or two ranges remain.
+        ranges: list = []
+        for lo, hi in sorted((m["min_doc"], m["max_doc"]) for m in committed):
+            if ranges and lo <= ranges[-1][1] + 1:
+                ranges[-1][1] = max(ranges[-1][1], hi)
+            else:
+                ranges.append([lo, hi])
+        done = reduce(
+            operator.or_, (F.col("doc_id").between(lo, hi) for lo, hi in ranges)
+        )
+        pending = docs.filter(~done)
+        seg_id_base = max(m["seg_id"] for m in committed) + 1
     # stored fields: pure-JVM parquet write (no Python, scales linearly);
-    # the tokens column never leaves the JVM for this copy (column
-    # pruning removes the tokenizer UDF from this branch). The write is
+    # column pruning drops the tokenizer from this branch, which reads
+    # the persisted corpus through the doc-id projection. The write is
     # independent of segment building — submit it on its own thread so
     # the two DAG branches share the executor pool concurrently, exactly
     # as Lucene's stored-fields writer streams alongside the postings
@@ -490,9 +364,9 @@ def build_segmented_index(
     stored_thread = InheritableThread(target=_write_stored)
     stored_thread.start()
     try:
-        manifests = build_segments(
-            docs, index_dir, num_segments, fail_on_seg, already_ranged=ranged,
-            index_positions=index_positions,
+        manifests = committed + build_segments(
+            pending, index_dir, num_segments, fail_on_seg, already_ranged=ranged,
+            index_positions=index_positions, seg_id_base=seg_id_base,
         )
     finally:
         stored_thread.join()
@@ -514,7 +388,8 @@ def build_segmented_index(
     # (or nothing) — never a half-written merged table
     prev = latest_snapshot(index_dir)
     gen = (prev["generation"] + 1) if prev else 0
-    segments = committed_segments(index_dir)
+    # exactly the segments the stats count, not a directory listing
+    segments = sorted(f"seg-{m['seg_id']:05d}" for m in manifests)
     merged = merge_segments(
         spark, index_dir, seg_group_size, n_buckets,
         segments=segments, merged_name=merged_dir_name(gen),

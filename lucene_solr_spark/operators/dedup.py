@@ -475,13 +475,14 @@ def benchmark_contamination(
     the whole operator is a narrow map + broadcast semi-join + one
     hash-agg per doc; no all-pairs, no corpus shuffle beyond the
     per-doc aggregation. Every input doc appears in the output
-    (sub-k-token docs report 0 shingles, fraction 0)."""
-    sh = (
-        df.select(
-            F.col(id_col),
-            F.explode(shingles(tokens_col(text_col), k)).alias("sh"),
-        )
-        .dropDuplicates([id_col, "sh"])
+    (sub-k-token docs report 0 shingles, fraction 0).
+
+    ``id_col`` must be unique per row: each row's shingles are then
+    de-duplicated in place (``array_distinct`` before the explode), and
+    the exploded (doc, shingle) pairs are distinct with no shuffle."""
+    sh = df.select(
+        F.col(id_col),
+        F.explode(F.array_distinct(shingles(tokens_col(text_col), k))).alias("sh"),
     )
     bench = (
         bench_df.select(

@@ -4,7 +4,7 @@ The pruned TOP_SCORES path (reference: search/WANDScorer.java:29-164,
 BlockMaxConjunctionScorer.java:29-45, ImpactsDISI.java:95-127,
 MaxScoreCache.java:61-124), re-expressed for Spark's execution model:
 
-- a *leaf* = one ``seg_group`` (a contiguous global doc-id range), the
+- a *leaf* = one ``seg_group`` (disjoint global doc-id ranges), the
   analog of a Lucene segment/LeafReaderContext. Leaves are processed in
   parallel by ``applyInPandas``; each returns its local top-k, and the
   global answer is a tiny ``orderBy(score desc, doc_id asc).limit(k)``

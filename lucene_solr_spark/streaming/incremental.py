@@ -43,7 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.builder import tokenize_udf, simple_tokens
+from ..index.builder import analyzer_tokens
 from ..index.docid import with_doc_ids
 from ..index.segments import build_segments
 
@@ -139,6 +139,7 @@ def start_incremental_index(
     the query ALIVE re-executing continuously — the DaemonStream mode
     (reference solr/solrj/.../io/stream/DaemonStream.java) — until
     ``.stop()``."""
+    tokens = analyzer_tokens(analyzer, "text")  # batch-build tokenization
     os.makedirs(f"{index_dir}/segments", exist_ok=True)
     checkpoint_dir = checkpoint_dir or f"{index_dir}/_checkpoint"
 
@@ -182,11 +183,9 @@ def start_incremental_index(
             ("conv_id", "turn_idx"),
             num_partitions=segments_per_batch,
             cache_registry=caches,
-        ).withColumn("doc_id", F.col("doc_id") + F.lit(doc_base))
-        if analyzer == "simple":
-            docs = docs.withColumn("tokens", simple_tokens("text"))
-        else:
-            docs = docs.withColumn("tokens", tokenize_udf(F.col("text")))
+        ).withColumn("doc_id", F.col("doc_id") + F.lit(doc_base)).withColumn(
+            "tokens", tokens
+        )
         try:
             build_segments(
                 docs,

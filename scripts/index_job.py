@@ -34,7 +34,7 @@ def main() -> int:
     ap.add_argument("--seg-group-size", type=int, default=8)
     ap.add_argument("--buckets", type=int, default=32)
     ap.add_argument("--positions", action="store_true")
-    ap.add_argument("--analyzer", default="standard")
+    ap.add_argument("--analyzer", default="standard", choices=("standard", "simple"))
     ap.add_argument("--query", default=None, help="comma-separated terms")
     ap.add_argument("--mode", default="disjunctive",
                     choices=["disjunctive", "conjunctive", "dismax"])

@@ -413,3 +413,43 @@ def test_no_unpartitioned_window_in_any_registered_query(spark):
         if hits:
             offenders[name] = hits
     assert not offenders, offenders
+
+
+def _executed_plan(df) -> str:
+    """The final (post-AQE) physical plan, after running df."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_build_docs_cross_no_python(spark, tiny_corpus):
+    """Doc ids and standard tokens are JVM columns: neither the tokenized
+    docs nor their stored-fields projection runs a Python UDF node."""
+    from lucene_solr_spark.index.builder import (
+        tokenized_docs,
+        transcripts_from_pandas,
+    )
+
+    docs, _, _ = tokenized_docs(
+        transcripts_from_pandas(spark, tiny_corpus), num_partitions=4,
+        analyzer="standard",
+    )
+    for df in (docs, docs.drop("tokens")):
+        plan = _executed_plan(df)
+        for node in ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, plan
+
+
+def test_contamination_shingles_distinct_without_shuffle(spark):
+    """benchmark_contamination de-duplicates each doc's shingles in the
+    row (array_distinct) instead of a dropDuplicates shuffle, which ran
+    once per use of the shingle stream: the only shuffles left are the
+    three aggregates (benchmark distinct, per-doc totals, per-doc hits)."""
+    import re
+
+    from lucene_solr_spark.operators.dedup import benchmark_contamination
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    out = benchmark_contamination(docs, docs.filter(F.col("doc_id") % 97 == 3))
+    tree = formatted_plan(out).split("\n\n")[0]
+    shuffles = re.findall(r"\+- Exchange \(", tree)
+    assert len(shuffles) == 3, tree

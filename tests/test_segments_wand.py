@@ -6,7 +6,8 @@
 - WAND parity mirrors CheckHits.checkTopScores (pruned TOP_SCORES vs
   COMPLETE must agree exactly — CheckHits.java:576-591).
 - resume mirrors the per-partition checkpoint requirement: crash
-  mid-build, rerun, completed segments are skipped, result identical.
+  mid-build, rerun, completed segments are kept and their doc ranges
+  skipped, result identical.
 """
 
 import json
@@ -17,7 +18,7 @@ import pandas as pd
 import pytest
 
 from lucene_solr_spark.index.builder import transcripts_from_pandas
-from lucene_solr_spark.index.codec import decode_block
+from lucene_solr_spark.index.codec import decode_block, decode_positions
 from lucene_solr_spark.index.segments import build_segmented_index, read_segmented_index
 from lucene_solr_spark.search.bruteforce import search_bruteforce
 from lucene_solr_spark.search.wand import search_wand
@@ -88,16 +89,20 @@ def test_norms_match(seg_index, tiny_oracle):
         assert norms[doc_id][1] == nb
 
 
-def test_wand_matches_golden(seg_index):
+def _assert_golden(index):
     with open(GOLDEN) as f:
         golden = json.load(f)["queries"]
     for qid, q in golden.items():
-        got = search_wand(seg_index, q["terms"], q["mode"], q["k"]).collect()
+        got = search_wand(index, q["terms"], q["mode"], q["k"]).collect()
         exp = q["hits"]
         assert len(got) == len(exp), f"{qid}: {len(got)} != {len(exp)}"
         for i, (g, e) in enumerate(zip(got, exp)):
             assert g["doc_id"] == e["doc_id"], f"{qid} rank {i}"
             assert np.float32(g["score"]) == np.float32(e["score"]), f"{qid} rank {i}"
+
+
+def test_wand_matches_golden(seg_index):
+    _assert_golden(seg_index)
 
 
 def test_wand_msm_dismax_vs_bruteforce(seg_index, tiny_index):
@@ -157,6 +162,105 @@ def test_resume_from_checkpoint(spark, tiny_corpus, tmp_path_factory):
         (r["doc_id"], r["score"]) for r in b
     ]
     assert idx.doc_count == fresh.doc_count
+
+
+def test_resume_after_boundaries_move(spark, tmp_path):
+    """A rerun's range sampling puts partition boundaries elsewhere than
+    the crashed build's; the resumed index must still hold every doc
+    exactly once. At 20k turns the sampled boundaries move between two
+    builds in one session, so reusing a committed segment by partition
+    id (instead of by its doc range) loses or duplicates docs."""
+    from pyspark.sql import functions as F
+
+    from lucene_solr_spark.index.builder import standard_tokens
+    from lucene_solr_spark.sources.synth import synth_transcripts
+
+    n = 20_000
+    synth_transcripts(spark, n, seed=7).write.parquet(str(tmp_path / "corpus"))
+    corpus = spark.read.parquet(str(tmp_path / "corpus"))
+    index_dir = str(tmp_path / "idx")
+    kw = dict(num_segments=4, seg_group_size=1, n_buckets=8)
+    with pytest.raises(Exception):
+        build_segmented_index(corpus, index_dir, fail_on_seg=0, **kw)
+    # a rerun after a crash starts without the crashed run's cached
+    # range-sorted corpus (with_doc_ids persists it): drop that cache, so
+    # the rerun samples its own range boundaries as a new process would
+    corpus.repartitionByRange(4, "conv_id", "turn_idx").sortWithinPartitions(
+        "conv_id", "turn_idx"
+    ).unpersist()
+    done = [
+        s for s in os.listdir(f"{index_dir}/segments")
+        if os.path.exists(f"{index_dir}/segments/{s}/manifest.json")
+    ]
+    assert 0 < len(done) < 4, done
+    idx = build_segmented_index(corpus, index_dir, **kw)
+
+    ids = idx.norms.agg(
+        F.count("*"), F.countDistinct("doc_id"), F.min("doc_id"), F.max("doc_id")
+    ).first()
+    assert tuple(ids) == (n, n, 0, n - 1)
+    lens = corpus.select(F.size(standard_tokens("text")).alias("dl"))
+    want = lens.agg(F.sum((F.col("dl") > 0).cast("long")), F.sum("dl")).first()
+    assert (idx.doc_count, idx.sum_total_term_freq) == tuple(want)
+    assert idx.max_doc == n
+
+
+def _checked_postings(index) -> dict:
+    """(term, doc) → (freq, norm, positions) over every merged block,
+    asserting each term's postings are sorted, in disjoint blocks bounded
+    by first_doc/last_doc."""
+    out, prev = {}, {}
+    for r in sorted(index.blocks.collect(), key=lambda r: (r["term"], r["first_doc"])):
+        t = r["term"]
+        d, f = decode_block(bytes(r["docs"]), bytes(r["freqs"]))
+        assert (np.diff(d) > 0).all(), t
+        assert (d[0], d[-1]) == (r["first_doc"], r["last_doc"]), t
+        assert prev.get(t, -1) < d[0], t
+        prev[t] = d[-1]
+        n = np.frombuffer(bytes(r["norms"]), dtype=np.uint8)
+        pos, off = decode_positions(bytes(r["positions"]), f)
+        for i, doc in enumerate(d):
+            out[t, int(doc)] = (int(f[i]), int(n[i]), pos[off[i]:off[i + 1]].tolist())
+    return out
+
+
+def test_resume_around_committed_segment(spark, tiny_corpus, tmp_path):
+    """A resumed segment can hold docs on both sides of a committed one.
+    Here seg-00000 and seg-00002 lose their commit and are rebuilt as one
+    segment around committed seg-00001, and the default seg_group_size
+    merges all of them in one seg_group: the merged postings must equal
+    the full build's, sorted per term, and the pruned top-k must equal
+    the golden answers."""
+    df = transcripts_from_pandas(spark, tiny_corpus)
+    index_dir = str(tmp_path)
+    kw = dict(n_buckets=8, index_positions=True)
+    want = _checked_postings(build_segmented_index(df, index_dir, num_segments=4, **kw))
+    for seg in ("seg-00000", "seg-00002"):
+        os.remove(f"{index_dir}/segments/{seg}/manifest.json")
+    idx = build_segmented_index(df, index_dir, num_segments=1, **kw)
+
+    with open(f"{index_dir}/segments/seg-00004/manifest.json") as f:
+        rebuilt = json.load(f)
+    with open(f"{index_dir}/segments/seg-00001/manifest.json") as f:
+        kept = json.load(f)
+    assert rebuilt["min_doc"] < kept["min_doc"] < kept["max_doc"] < rebuilt["max_doc"]
+    assert _checked_postings(idx) == want
+    _assert_golden(idx)
+
+
+def test_resume_refuses_segment_of_other_codec(spark, tiny_corpus, tmp_path):
+    """A committed segment written by another block codec is never mixed
+    into a resumed build: the driver refuses it before any job runs."""
+    seg = tmp_path / "segments" / "seg-00000"
+    seg.mkdir(parents=True)
+    (seg / "manifest.json").write_text(
+        json.dumps({"seg_id": 0, "min_doc": 0, "max_doc": 9, "codec": "varint-v0"})
+    )
+    with pytest.raises(ValueError, match="uses codec 'varint-v0'"):
+        build_segmented_index(
+            transcripts_from_pandas(spark, tiny_corpus), str(tmp_path),
+            num_segments=2,
+        )
 
 
 def test_search_after_pagination(seg_index, tiny_index):

@@ -16,13 +16,13 @@ no Spark session, so hundreds of random corpora run in seconds:
 """
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from lucene_solr_spark.functions import bm25
 from lucene_solr_spark.functions.smallfloat import int_to_byte4
-from lucene_solr_spark.index.segments import _segment_postings
+from lucene_solr_spark.index.segments import _encode_segment_arrow
 from lucene_solr_spark.search.scoring import term_weights
 from lucene_solr_spark.search.wand import _leaf_topk
 
@@ -38,26 +38,30 @@ query_strategy = st.lists(
 
 
 def _build(corpus):
-    """corpus (list of token-index lists) → (postings pdf, stats)."""
-    pdf = pd.DataFrame(
+    """corpus (list of token-index lists) → (doc rows, postings pdf,
+    counters), the postings encoded by the segment build's encoder."""
+    tbl = pa.table(
         {
             # non-contiguous absolute doc ids: the kernel must not
             # assume density
-            "doc_id": np.arange(len(corpus), dtype=np.int64) * 3 + 1,
-            "tokens": [[VOCAB[i] for i in doc] for doc in corpus],
+            "doc_id": pa.array(np.arange(len(corpus), dtype=np.int64) * 3 + 1),
+            "tokens": pa.array(
+                [[VOCAB[i] for i in doc] for doc in corpus], pa.list_(pa.string())
+            ),
         }
     )
-    postings, norms, counters = _segment_postings(pdf, seg_id=0)
-    return pdf, postings, counters
+    postings, norms, counters = _encode_segment_arrow(tbl, seg_id=0)
+    return tbl.to_pylist(), postings.to_pandas(), counters
 
 
-def _oracle(pdf, query_terms, weights, cache, mode, min_should_match):
+def _oracle(docs, query_terms, weights, cache, mode, min_should_match):
     """Exhaustive scorer from raw token lists via the pure float32 spec
     (bm25.score_term), accumulation mirroring the kernel: float32
     contributions summed in sorted-term order into float64."""
     rows = []
     n_present = len(weights)
-    for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
+    for doc in docs:
+        doc_id, toks = doc["doc_id"], doc["tokens"]
         dl = len(toks)
         nb = int(int_to_byte4(np.array([dl]))[0])
         acc, mx, matched = 0.0, 0.0, 0
@@ -99,7 +103,7 @@ def _oracle(pdf, query_terms, weights, cache, mode, min_should_match):
 def test_pruned_equals_complete_equals_oracle(corpus, query, mode, k, msm):
     if mode != "disjunctive":
         msm = None
-    pdf, postings, counters = _build(corpus)
+    docs, postings, counters = _build(corpus)
     if counters["n_postings"] == 0:
         return
     dfs = postings.groupby("term")["n_docs"].sum()
@@ -123,7 +127,7 @@ def test_pruned_equals_complete_equals_oracle(corpus, query, mode, k, msm):
     assert pruned["doc_id"].tolist() == complete["doc_id"].tolist()
     assert pruned["score"].tolist() == complete["score"].tolist()
 
-    expect = _oracle(pdf, query, weights, cache, mode, msm)[:k]
+    expect = _oracle(docs, query, weights, cache, mode, msm)[:k]
     assert pruned["doc_id"].tolist() == [d for d, _ in expect]
     assert pruned["score"].tolist() == [float(s) for _, s in expect]
 
@@ -133,7 +137,7 @@ def test_pruned_equals_complete_equals_oracle(corpus, query, mode, k, msm):
 def test_search_after_cursor_is_lossless(corpus, query, k):
     """Keyset pagination: page2(after=page1[-1]) under pruning equals
     positions k..2k of the COMPLETE ranking."""
-    pdf, postings, counters = _build(corpus)
+    docs, postings, counters = _build(corpus)
     if counters["n_postings"] == 0:
         return
     dfs = postings.groupby("term")["n_docs"].sum()
