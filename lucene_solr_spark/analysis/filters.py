@@ -104,7 +104,7 @@ def synonym_filter(tokens: Column, mapping: dict) -> Column:
         F.array(*[F.lit(k) for k in mapping]),
         F.array(*[F.lit(v) for v in mapping.values()]),
     )
-    return F.transform(tokens, lambda x: F.coalesce(m.getItem(x), x))
+    return F.transform(tokens, lambda x: F.coalesce(m[x], x))
 
 
 _ACCENTS = "àáâãäåçèéêëìíîïñòóôõöùúûüýÿ"

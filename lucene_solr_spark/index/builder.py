@@ -125,6 +125,7 @@ def tokenized_docs(
     num_partitions: int | None = None,
     analyzer: str = "standard",
     id_col: str | None = None,
+    cache_registry: list | None = None,
 ):
     """transcripts → (docs DataFrame with doc_id + tokens, order_cols,
     ranged).
@@ -133,6 +134,7 @@ def tokenized_docs(
     else raises ValueError.
     id_col: name of a pre-existing dense doc id column to trust instead of
     assigning one (e.g. the documents table's own doc_id).
+    cache_registry: passed to with_doc_ids.
 
     The third return value says whether partitions are already contiguous
     disjoint doc_id ranges in partition order (true for the
@@ -149,7 +151,9 @@ def tokenized_docs(
     else:
         order_cols = tuple(order_cols)
         ranged = True
-        docs = with_doc_ids(transcripts, order_cols, num_partitions)
+        docs = with_doc_ids(
+            transcripts, order_cols, num_partitions, cache_registry=cache_registry
+        )
     return docs.withColumn("tokens", tokens), order_cols, ranged
 
 

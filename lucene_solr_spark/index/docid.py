@@ -25,7 +25,7 @@ Requires the sort key to be unique (ours is: (conv_id, turn_idx)).
 
 Union safety: both ``spark_partition_id`` and
 ``monotonically_increasing_id`` are bound to the partition index of the
-projection that evaluates them, i.e. of the persisted range-partitioned
+projection that evaluates them, i.e. of the checkpointed range-partitioned
 child — the same index the count job grouped by. A Union above the
 projection renumbers its own output partitions but not the child's, so
 the ids are the same standalone or as any input of a Union.
@@ -50,20 +50,26 @@ def with_doc_ids(
 ) -> DataFrame:
     """Return df + dense int64 ``id_col`` ranking rows by ``order_cols``.
 
-    The range-partitioned, sorted input is persisted (the count job and
-    the id projection must see the same partitions); every consumer of
-    the result reads that cache through a cheap projection.
+    The range-partitioned, sorted input is a local checkpoint that the
+    count job materializes: the count job and the id projection must see
+    the same partitions, and a checkpoint, unlike a cache, is never
+    recomputed from its lineage — a recomputation would re-sample the
+    range boundaries, so the literal offsets would no longer match the
+    partitions. Every consumer of the result reads the checkpoint through
+    a cheap projection.
 
-    cache_registry: if given, the internally persisted DataFrame is
-    appended so a long-running caller (the NRT stream builds ids every
-    micro-batch) can unpersist it once the ids are materialized.
+    cache_registry: if given, a callable that releases the checkpoint's
+    blocks is appended, so a long-running caller (the NRT stream builds
+    ids every micro-batch) can free them once the ids are materialized.
     """
     spark = df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     ordered = df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols)
-    ordered = ordered.persist()
+    ordered = ordered.localCheckpoint(eager=False)
     if cache_registry is not None:
-        cache_registry.append(ordered)
+        # the checkpointed RDD: unpersisting the DataFrame does not free it
+        rdd = ordered._jdf.queryExecution().analyzed().rdd()
+        cache_registry.append(lambda: rdd.unpersist(False))
     counts = (
         ordered.groupBy(F.spark_partition_id().alias("pid"))
         .count()

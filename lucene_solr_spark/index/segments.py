@@ -31,8 +31,8 @@ import json
 import operator
 import os
 import time
-from dataclasses import dataclass
-from functools import reduce
+from dataclasses import dataclass, field
+from functools import cached_property, reduce
 
 import numpy as np
 from pyspark import TaskContext
@@ -262,12 +262,22 @@ def _committed_manifests(index_dir: str, segments: list) -> list:
 
 @dataclass
 class SegmentedIndex:
-    """The merged, at-rest index (SURVEY §7.1 step 4 output)."""
+    """The merged, at-rest index (SURVEY §7.1 step 4 output).
+
+    The same merged files are read two ways. The DataFrames below feed
+    Spark plans that scale with the index. ``lookup_df`` and
+    ``read_blocks`` read ``merged_dir`` on the driver with
+    ``pyarrow.dataset`` and launch no Spark job: the first serves the
+    dictionary lookup every query makes, the second feeds top-k queries
+    small enough to score in-process (search/wand.py). Both prune to the
+    query terms' term_bucket directories and push the term filter into
+    the parquet scan."""
 
     blocks: DataFrame      # merged posting blocks (term_bucket-partitioned)
     dictionary: DataFrame  # (term, df, cf)
     norms: DataFrame       # (doc_id, dl, norm_byte)
     stored: DataFrame      # source rows + doc_id
+    merged_dir: str        # the snapshot's merged-<gen> dir: postings/, dictionary/
     doc_count: int
     sum_total_term_freq: int
     max_doc: int
@@ -275,11 +285,51 @@ class SegmentedIndex:
     has_positions: bool = False
     # resident-searcher term-dictionary cache: term -> df (None =
     # known-absent). Lucene keeps the term dictionary's FST index
-    # memory-resident per searcher; the Spark analog memoizes per-term
-    # df lookups on the driver so a warm query launches no dictionary
-    # job. The index is immutable (appends produce a NEW handle), so
-    # entries never invalidate.
-    df_cache: dict | None = None
+    # memory-resident per searcher; the analog memoizes per-term df
+    # lookups on the driver. The index is immutable (appends produce a
+    # NEW handle), so entries never invalidate.
+    df_cache: dict = field(default_factory=dict)
+
+    def _term_filter(self, terms):
+        import pyarrow.dataset as ds
+
+        from ..operators.hashing import h60_py  # local: avoid cycle
+
+        buckets = sorted({h60_py(t) % self.n_buckets for t in terms})
+        return ds.field("term_bucket").isin(buckets) & ds.field("term").isin(list(terms))
+
+    @cached_property
+    def _dictionary_ds(self):
+        import pyarrow.dataset as ds
+
+        return ds.dataset(f"{self.merged_dir}/dictionary", partitioning="hive")
+
+    @cached_property
+    def _postings_ds(self):
+        import pyarrow.dataset as ds
+
+        return ds.dataset(f"{self.merged_dir}/postings", partitioning="hive")
+
+    def lookup_df(self, terms) -> dict:
+        """term -> df for those of ``terms`` that are in the dictionary.
+        Misses of ``df_cache`` are read in one driver-side scan."""
+        uniq = list(dict.fromkeys(terms))
+        missing = [t for t in uniq if t not in self.df_cache]
+        if missing:
+            tbl = self._dictionary_ds.to_table(
+                columns=["term", "df"], filter=self._term_filter(missing)
+            )
+            found = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
+            for t in missing:
+                self.df_cache[t] = found.get(t)
+        return {t: self.df_cache[t] for t in uniq if self.df_cache[t] is not None}
+
+    def read_blocks(self, terms, columns):
+        """The posting blocks of ``terms`` as a pyarrow Table holding only
+        ``columns``, read on the driver."""
+        return self._postings_ds.to_table(
+            columns=list(columns), filter=self._term_filter(terms)
+        )
 
 
 def build_segmented_index(
@@ -320,8 +370,12 @@ def build_segmented_index(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
     committed = _committed_manifests(index_dir, committed_segments(index_dir))
+    # the doc-id checkpoint is freed once the stored fields and the
+    # segments are written: the index read back below does not use it
+    releases: list = []
     docs, order_cols, ranged = tokenized_docs(
-        transcripts, order_cols, text_col, num_segments, analyzer, id_col
+        transcripts, order_cols, text_col, num_segments, analyzer, id_col,
+        cache_registry=releases,
     )
     pending, seg_id_base = docs, 0
     if committed:
@@ -344,7 +398,7 @@ def build_segmented_index(
         seg_id_base = max(m["seg_id"] for m in committed) + 1
     # stored fields: pure-JVM parquet write (no Python, scales linearly);
     # column pruning drops the tokenizer from this branch, which reads
-    # the persisted corpus through the doc-id projection. The write is
+    # the checkpointed corpus through the doc-id projection. The write is
     # independent of segment building — submit it on its own thread so
     # the two DAG branches share the executor pool concurrently, exactly
     # as Lucene's stored-fields writer streams alongside the postings
@@ -370,6 +424,8 @@ def build_segmented_index(
         )
     finally:
         stored_thread.join()
+        for release in releases:
+            release()
     if stored_err:
         raise stored_err[0]
 
@@ -429,6 +485,7 @@ def read_segmented_index(spark: SparkSession, index_dir: str) -> SegmentedIndex:
         dictionary=spark.read.parquet(f"{index_dir}/{merged}/dictionary"),
         norms=spark.read.parquet(*norm_paths),
         stored=spark.read.parquet(f"{index_dir}/stored"),
+        merged_dir=f"{index_dir}/{merged}",
         doc_count=stats["doc_count"],
         sum_total_term_freq=stats["sum_total_term_freq"],
         max_doc=stats["max_doc"],

@@ -293,13 +293,7 @@ def search_phrase(
         )
     from ..operators.hashing import h60_py  # local: avoid cycle
 
-    uniq = list(dict.fromkeys(t for alts in slot_terms for t in alts))
-    dict_df = index.dictionary
-    if "term_bucket" in dict_df.columns:
-        dict_buckets = sorted({h60_py(t) % index.n_buckets for t in uniq})
-        dict_df = dict_df.filter(F.col("term_bucket").isin(dict_buckets))
-    rows = dict_df.filter(dict_df.term.isin(uniq)).select("term", "df").collect()
-    df_by_term = {r["term"]: int(r["df"]) for r in rows}
+    df_by_term = index.lookup_df(t for alts in slot_terms for t in alts)
     # a slot with NO present alternative ⇒ no hits (phrase is conjunctive
     # across slots); absent alternatives within a slot are just dropped
     slot_terms = [
@@ -388,18 +382,12 @@ def span_first(
     )
     if not getattr(index, "has_positions", False):
         raise ValueError("span_first needs a positional index")
-    dict_df = index.dictionary
-    if "term_bucket" in dict_df.columns:
-        dict_df = dict_df.filter(
-            F.col("term_bucket") == h60_py(term) % index.n_buckets
-        )
-    rows = dict_df.filter(dict_df.term == term).select("df").collect()
-    if not rows:
+    df_by_term = index.lookup_df([term])
+    if not df_by_term:
         return empty
     weights = dict(
         term_weights(
-            {term: int(rows[0]["df"])}, index.doc_count, [term], boost,
-            k1, b, precision,
+            df_by_term, index.doc_count, [term], boost, k1, b, precision,
         )
     )
     w = float(weights[term])
@@ -483,7 +471,7 @@ def _run_span(
     precision: str,
     idf_terms: Sequence[str] | None = None,
 ):
-    """Shared span-query runner: dictionary df lookup (bucket-pruned),
+    """Shared span-query runner: df lookup (``SegmentedIndex.lookup_df``),
     pinned BM25 span scoring env, per-``seg_group``-leaf matching over
     the needed terms' positional blocks only.
 
@@ -503,13 +491,7 @@ def _run_span(
     )
     needed = list(dict.fromkeys(needed))
     buckets = sorted({h60_py(t) % index.n_buckets for t in needed})
-    dict_df = index.dictionary
-    if "term_bucket" in dict_df.columns:
-        dict_df = dict_df.filter(F.col("term_bucket").isin(buckets))
-    rows = dict_df.filter(dict_df.term.isin(needed)).select(
-        "term", "df"
-    ).collect()
-    df_by_term = {r["term"]: int(r["df"]) for r in rows}
+    df_by_term = index.lookup_df(needed)
     if any(t not in df_by_term for t in required):
         return empty
     present = [t for t in needed if t in df_by_term]
@@ -825,18 +807,12 @@ def span_not(
     )
     if not getattr(index, "has_positions", False):
         raise ValueError("span_not needs a positional index")
-    dict_df = index.dictionary
-    if "term_bucket" in dict_df.columns:
-        dict_df = dict_df.filter(
-            F.col("term_bucket") == h60_py(include) % index.n_buckets
-        )
-    rows = dict_df.filter(dict_df.term == include).select("df").collect()
-    if not rows:
+    df_by_term = index.lookup_df([include])
+    if not df_by_term:
         return empty
     weights = dict(
         term_weights(
-            {include: int(rows[0]["df"])}, index.doc_count, [include],
-            boost, k1, b, precision,
+            df_by_term, index.doc_count, [include], boost, k1, b, precision,
         )
     )
     w = float(weights[include])

@@ -5,11 +5,23 @@ BlockMaxConjunctionScorer.java:29-45, ImpactsDISI.java:95-127,
 MaxScoreCache.java:61-124), re-expressed for Spark's execution model:
 
 - a *leaf* = one ``seg_group`` (disjoint global doc-id ranges), the
-  analog of a Lucene segment/LeafReaderContext. Leaves are processed in
-  parallel by ``applyInPandas``; each returns its local top-k, and the
-  global answer is a tiny ``orderBy(score desc, doc_id asc).limit(k)``
-  merge — exactly Lucene's per-segment search + TopDocs.merge
+  analog of a Lucene segment/LeafReaderContext. Each leaf returns its
+  local top-k, and the global answer merges them by (score desc, doc_id
+  asc) — exactly Lucene's per-segment search + TopDocs.merge
   (IndexSearcher.java:569-613, TopDocs.java:203).
+- one kernel, ``_leaf_topk``, scores a leaf, and it runs one of two
+  ways. The dispatch rule: a query whose postings count (Σ df over its
+  terms present in the index, known from the dictionary lookup) is at
+  most ``IN_PROCESS_MAX_POSTINGS`` runs *in-process*: the driver reads
+  the term_bucket-pruned blocks with pyarrow
+  (``SegmentedIndex.read_blocks``), runs the kernel per ``seg_group``,
+  merges in numpy and returns a local DataFrame — no Spark job, as
+  Lucene searches inside the searcher's process. A larger query runs
+  the kernel as Spark leaves (``groupBy("seg_group").applyInPandas``)
+  merged by ``orderBy(...).limit(k)``, so answers never depend on what
+  fits on the driver. Both read the same ``LEAF_COLUMNS`` and share the
+  weights and the ``after``/``complete`` semantics, so their answers are
+  bit-identical by construction.
 - within a leaf, per-block score ceilings come from the stored impacts
   (competitive (freq, norm) frontier): ``bmax(b) = max over impacts of
   the exact float32 term score``. A doc in block b of term t satisfies
@@ -39,15 +51,34 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import bm25
 from .scoring import term_weights
 
-__all__ = ["search_wand"]
+__all__ = ["search_wand", "IN_PROCESS_MAX_POSTINGS", "LEAF_COLUMNS"]
 
 _PAD = 1e-6
+
+# A query whose postings count (Σ df over its terms present in the index)
+# is at most this runs in-process on the driver; larger ones run as Spark
+# leaves. Set from a crossover sweep (CHANGES.md): on a 200k-turn index,
+# 4 cores, the in-process path was faster up to 0.9M postings and slower
+# from 1.29M.
+IN_PROCESS_MAX_POSTINGS = 1 << 20
+
+# the block columns _leaf_topk reads, and all either path reads
+LEAF_COLUMNS = (
+    "seg_group", "term", "first_doc", "last_doc", "n_docs", "docs", "freqs",
+    "norms", "impact_freqs", "impact_norms",
+)
+
+_RESULT_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("score", T.FloatType())]
+)
 
 
 class _TermBlocks:
@@ -371,6 +402,17 @@ def _theta_from(
     return float(np.sort(scores)[-k])
 
 
+def _local_result(spark, tops: list, k: int) -> DataFrame:
+    """The global top-k of the leaves' top-k frames, by (score desc,
+    doc_id asc) — TopDocs.merge (TopDocs.java:203) — as a local relation:
+    its collect() launches no Spark job."""
+    docs = np.concatenate([np.empty(0, np.int64)] + [t["doc_id"].to_numpy() for t in tops])
+    scores = np.concatenate([np.empty(0, np.float32)] + [t["score"].to_numpy() for t in tops])
+    order = np.lexsort((docs, -scores.astype(np.float64)))[:k]
+    top = pa.table({"doc_id": docs[order], "score": scores[order]})
+    return spark.createDataFrame(top, _RESULT_SCHEMA)
+
+
 def search_wand(
     index,
     terms: Sequence[str],
@@ -394,61 +436,21 @@ def search_wand(
     totalHitsThreshold=MAX analog) — used by tests to assert the pruned
     path is lossless (CheckHits.java:576-591)."""
     spark = index.blocks.sparkSession
-    empty = spark.createDataFrame([], "doc_id long, score float")
     uniq = list(dict.fromkeys(terms))
     if not uniq:
-        return empty
-    from ..operators.hashing import h60_py  # local: avoid cycle
-
-    # resident-searcher dictionary cache: warm terms cost no Spark job
-    # (Lucene's memory-resident term-dictionary FST analog; the index
-    # handle is immutable so entries never invalidate)
-    if getattr(index, "df_cache", None) is None:
-        try:
-            index.df_cache = {}
-        except AttributeError:  # frozen/foreign handle: run uncached
-            pass
-    df_cache = getattr(index, "df_cache", None)
-    missing = (
-        uniq if df_cache is None else [t for t in uniq if t not in df_cache]
-    )
-    if missing:
-        dict_df = index.dictionary
-        if "term_bucket" in dict_df.columns:  # partition-pruned lookup
-            dict_buckets = sorted(
-                {h60_py(t) % index.n_buckets for t in missing}
-            )
-            dict_df = dict_df.filter(F.col("term_bucket").isin(dict_buckets))
-        rows = (
-            dict_df.filter(dict_df.term.isin(missing))
-            .select("term", "df")
-            .collect()
-        )
-        found = {r["term"]: int(r["df"]) for r in rows}
-        if df_cache is not None:
-            for t in missing:
-                df_cache[t] = found.get(t)  # None = known-absent
-    else:
-        found = {}
-    if df_cache is not None:
-        df_by_term = {t: df_cache[t] for t in uniq if df_cache[t] is not None}
-    else:
-        df_by_term = found
+        return _local_result(spark, [], k)
+    # resident-searcher dictionary cache: warm terms cost no lookup, cold
+    # ones a driver-side scan (Lucene's memory-resident term-dictionary
+    # FST analog)
+    df_by_term = index.lookup_df(uniq)
     weights = dict(
         term_weights(df_by_term, index.doc_count, uniq, boost, k1, b)
     )
     n_present = len(weights)
     if n_present == 0 or (mode == "conjunctive" and n_present < len(uniq)):
-        return empty
+        return _local_result(spark, [], k)
     avgdl = bm25.avgdl(index.sum_total_term_freq, max(index.doc_count, 1))
     cache = bm25.norm_cache(avgdl, np.float32(k1), np.float32(b))
-
-    # partition pruning: term_bucket dirs of the query terms only,
-    # computed driver-side (h60 is the portable md5 hash — no Spark job)
-    buckets = sorted({h60_py(t) % index.n_buckets for t in uniq})
-    blocks = index.blocks.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(list(weights))
-    )
 
     def leaf(pdf: pd.DataFrame) -> pd.DataFrame:
         return _leaf_topk(
@@ -456,7 +458,17 @@ def search_wand(
             complete,
         )
 
-    local = blocks.groupBy("seg_group").applyInPandas(
-        leaf, schema="doc_id long, score float"
-    )
+    if sum(df_by_term.values()) <= IN_PROCESS_MAX_POSTINGS:
+        pdf = index.read_blocks(list(weights), LEAF_COLUMNS).to_pandas()
+        return _local_result(spark, [leaf(g) for _, g in pdf.groupby("seg_group")], k)
+
+    # partition pruning: term_bucket dirs of the query terms only,
+    # computed driver-side (h60 is the portable md5 hash — no Spark job)
+    from ..operators.hashing import h60_py  # local: avoid cycle
+
+    buckets = sorted({h60_py(t) % index.n_buckets for t in weights})
+    blocks = index.blocks.filter(
+        F.col("term_bucket").isin(buckets) & F.col("term").isin(list(weights))
+    ).select(*LEAF_COLUMNS)
+    local = blocks.groupBy("seg_group").applyInPandas(leaf, schema=_RESULT_SCHEMA)
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -196,8 +196,8 @@ def start_incremental_index(
                 manifest_extra={"batch_id": int(batch_id)},
             )
         finally:
-            for c in caches:
-                c.unpersist()
+            for release in caches:
+                release()
 
     writer = stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -39,3 +39,19 @@ def tiny_oracle(tiny_corpus):
     from lucene_solr_spark.search.oracle import build_oracle_index
 
     return build_oracle_index(tiny_corpus["text"].tolist())
+
+
+@pytest.fixture
+def wand_legs(monkeypatch):
+    """``for leg in wand_legs(): ...`` runs a test body once per execution
+    of search_wand: in-process, then as Spark leaves (the in-process
+    threshold patched to 0, so every query takes the Spark path)."""
+    from lucene_solr_spark.search import wand
+
+    def legs():
+        yield "in-process"
+        with monkeypatch.context() as m:
+            m.setattr(wand, "IN_PROCESS_MAX_POSTINGS", 0)
+            yield "spark"
+
+    return legs

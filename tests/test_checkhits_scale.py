@@ -6,7 +6,8 @@ machinery (block-max WAND seeds, block-max conjunction chunks, multiple
 128-posting blocks per term, multi-segment leaves) actually engages —
 mirroring test-framework/.../search/CheckHits.java:576-591 which runs
 every query with totalHitsThreshold=MAX (COMPLETE) and =1 (pruned) and
-asserts identical top-k.
+asserts identical top-k. Every comparison runs on both executions of
+search_wand: in-process on the driver and as Spark leaves.
 """
 
 import numpy as np
@@ -41,44 +42,46 @@ QUERIES = [
 ]
 
 
+def _hits(df):
+    return [(r["doc_id"], np.float32(r["score"])) for r in df.collect()]
+
+
 @pytest.mark.parametrize("mode,ranks,msm", QUERIES)
-def test_pruned_equals_complete(scale_index, mode, ranks, msm):
+def test_pruned_equals_complete(scale_index, mode, ranks, msm, wand_legs):
     terms = [synth_term(r) for r in ranks]
+    answers = {}
+    for leg in wand_legs():
+        for k in (1, 10):
+            pruned = _hits(search_wand(
+                scale_index, terms, mode, k, min_should_match=msm
+            ))
+            full = _hits(search_wand(
+                scale_index, terms, mode, k, min_should_match=msm, complete=True
+            ))
+            assert pruned == full, (leg, mode, ranks, k)
+            answers[leg, k] = pruned
     for k in (1, 10):
-        pruned = search_wand(
-            scale_index, terms, mode, k, min_should_match=msm
-        ).collect()
-        full = search_wand(
-            scale_index, terms, mode, k, min_should_match=msm, complete=True
-        ).collect()
-        assert [(r["doc_id"], np.float32(r["score"])) for r in pruned] == [
-            (r["doc_id"], np.float32(r["score"])) for r in full
-        ], (mode, ranks, k)
+        assert answers["in-process", k] == answers["spark", k]
 
 
-def test_search_after_pruned_equals_complete(scale_index):
+def test_search_after_pruned_equals_complete(scale_index, wand_legs):
     terms = [synth_term(1), synth_term(2), synth_term(50)]
-    page1 = search_wand(scale_index, terms, "disjunctive", 10).collect()
-    anchor = (float(page1[-1]["score"]), int(page1[-1]["doc_id"]))
-    pruned = search_wand(
-        scale_index, terms, "disjunctive", 10, after=anchor
-    ).collect()
-    full = search_wand(
-        scale_index, terms, "disjunctive", 10, after=anchor, complete=True
-    ).collect()
-    assert [(r["doc_id"], np.float32(r["score"])) for r in pruned] == [
-        (r["doc_id"], np.float32(r["score"])) for r in full
-    ]
-    # conjunctive cursor too (exercises _conjunction_topk's after path)
-    c1 = search_wand(scale_index, [synth_term(1), synth_term(2)], "conjunctive", 10).collect()
-    a2 = (float(c1[-1]["score"]), int(c1[-1]["doc_id"]))
-    cp = search_wand(
-        scale_index, [synth_term(1), synth_term(2)], "conjunctive", 10, after=a2
-    ).collect()
-    cf = search_wand(
-        scale_index, [synth_term(1), synth_term(2)], "conjunctive", 10,
-        after=a2, complete=True,
-    ).collect()
-    assert [(r["doc_id"], np.float32(r["score"])) for r in cp] == [
-        (r["doc_id"], np.float32(r["score"])) for r in cf
-    ]
+    conj = [synth_term(1), synth_term(2)]
+    for leg in wand_legs():
+        page1 = search_wand(scale_index, terms, "disjunctive", 10).collect()
+        anchor = (float(page1[-1]["score"]), int(page1[-1]["doc_id"]))
+        pruned = _hits(search_wand(
+            scale_index, terms, "disjunctive", 10, after=anchor
+        ))
+        full = _hits(search_wand(
+            scale_index, terms, "disjunctive", 10, after=anchor, complete=True
+        ))
+        assert pruned == full, leg
+        # conjunctive cursor too (exercises _conjunction_topk's after path)
+        c1 = search_wand(scale_index, conj, "conjunctive", 10).collect()
+        a2 = (float(c1[-1]["score"]), int(c1[-1]["doc_id"]))
+        cp = _hits(search_wand(scale_index, conj, "conjunctive", 10, after=a2))
+        cf = _hits(search_wand(
+            scale_index, conj, "conjunctive", 10, after=a2, complete=True
+        ))
+        assert cp == cf, leg

@@ -44,3 +44,33 @@ def test_ids_unchanged_as_second_input_of_union(spark):
     union = _rows(first.unionByName(ids))
     assert [r for r in union if r[2] >= 0] == alone
     assert len(union) == len(alone) + 4
+
+
+def test_ids_survive_dropped_cache(spark):
+    """Dropping every cache must not change the ids of an earlier result:
+    re-evaluating a cached range sort re-samples its boundaries, which
+    the offsets were not counted for."""
+    from lucene_solr_spark.sources.synth import synth_transcripts
+
+    ids = with_doc_ids(synth_transcripts(spark, 20000), num_partitions=4)
+    distinct = ids.select(F.countDistinct("doc_id"), F.max("doc_id"))
+    assert tuple(distinct.first()) == (20000, 19999)
+    spark.catalog.clearCache()
+    assert tuple(distinct.first()) == (20000, 19999)
+
+
+def test_cache_registry_releases_blocks(spark):
+    """The NRT stream frees each micro-batch's range-sorted blocks through
+    the callables with_doc_ids registers."""
+    registry: list = []
+    ids = with_doc_ids(_corpus(spark), num_partitions=5, cache_registry=registry)
+    assert ids.count() == 600
+    plan = ids._jdf.queryExecution().analyzed()
+    while plan.getClass().getSimpleName() != "LogicalRDD":
+        plan = plan.children().apply(0)
+    rdd_id = plan.rdd().id()
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    assert persistent().contains(rdd_id)
+    for release in registry:
+        release()
+    assert not persistent().contains(rdd_id)

@@ -6,6 +6,8 @@ synonym/SynonymGraphFilter.java, miscellaneous/ASCIIFoldingFilter.java,
 miscellaneous/LengthFilter.java.
 """
 
+import warnings
+
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.analysis.filters import (
@@ -61,6 +63,16 @@ def test_synonym_and_fold(spark):
         "cafe",
         "naive",
     ]
+
+
+def test_synonym_filter_uses_no_deprecated_api(spark):
+    """The map lookup is built with ``m[x]``; ``Column.getItem`` with a
+    Column key warns that it is deprecated."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        assert _apply(
+            spark, ["rapid", "slow"], lambda c: synonym_filter(c, {"rapid": "fast"})
+        ) == ["fast", "slow"]
 
 
 def test_length_filter(spark):

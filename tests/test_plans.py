@@ -71,21 +71,96 @@ def test_term_bucket_partition_pruning(spark, tiny_corpus, tmp_path_factory):
     assert "term" in pushed, pushed
 
 
-def test_wand_plan_ends_in_global_topk(spark, tiny_corpus, tmp_path_factory):
-    """The pruned query path must reduce via TakeOrderedAndProject
-    (per-partition top-k + tiny global merge), not a full sort."""
-    from lucene_solr_spark import fixtures
+@pytest.fixture(scope="module")
+def topk_index(spark, tiny_corpus, tmp_path_factory):
+    """A positional segmented index over the tiny corpus."""
     from lucene_solr_spark.index.builder import transcripts_from_pandas
     from lucene_solr_spark.index.segments import build_segmented_index
-    from lucene_solr_spark.search.wand import search_wand
 
     index_dir = str(tmp_path_factory.mktemp("topkidx"))
     df = transcripts_from_pandas(spark, tiny_corpus)
-    idx = build_segmented_index(
-        df, index_dir, num_segments=4, seg_group_size=2, n_buckets=8
+    return build_segmented_index(
+        df, index_dir, num_segments=4, seg_group_size=2, n_buckets=8,
+        index_positions=True,
     )
-    hits = search_wand(idx, [fixtures.make_vocab()[0]], "disjunctive", 10)
+
+
+def _logical_nodes(df):
+    todo = [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        n = todo.pop()
+        yield n
+        kids = n.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+
+
+def test_wand_plan_ends_in_global_topk(topk_index, monkeypatch):
+    """The Spark path must reduce via TakeOrderedAndProject
+    (per-partition top-k + tiny global merge), not a full sort."""
+    from lucene_solr_spark import fixtures
+    from lucene_solr_spark.search import wand
+    from lucene_solr_spark.search.wand import search_wand
+
+    monkeypatch.setattr(wand, "IN_PROCESS_MAX_POSTINGS", 0)
+    hits = search_wand(topk_index, [fixtures.make_vocab()[0]], "disjunctive", 10)
     assert "TakeOrderedAndProject" in formatted_plan(hits)
+
+
+def test_wand_leaf_input_omits_positions(topk_index, monkeypatch):
+    """The Spark leaves get only the kernel's block columns: a positional
+    index's position streams are neither scanned nor shipped to Python."""
+    from lucene_solr_spark import fixtures
+    from lucene_solr_spark.search import wand
+    from lucene_solr_spark.search.wand import LEAF_COLUMNS, search_wand
+
+    monkeypatch.setattr(wand, "IN_PROCESS_MAX_POSTINGS", 0)
+    hits = search_wand(topk_index, [fixtures.make_vocab()[0]], "disjunctive", 10)
+    leaves = [
+        n for n in _logical_nodes(hits)
+        if n.getClass().getSimpleName() == "FlatMapGroupsInPandas"
+    ]
+    assert len(leaves) == 1
+    out = leaves[0].child().output()
+    cols = [out.apply(i).name() for i in range(out.size())]
+    assert set(cols) == set(LEAF_COLUMNS)
+    assert "positions" not in formatted_plan(hits)
+
+
+def test_small_wand_query_runs_no_spark_job(spark, topk_index):
+    """A query under the in-process threshold is answered on the driver:
+    its result is a local table, and the call plus collect() launch no
+    job, even for terms the dictionary cache has not seen."""
+    from lucene_solr_spark import fixtures
+    from lucene_solr_spark.search.wand import search_wand
+
+    terms = [fixtures.make_vocab()[i] for i in (2, 7, 19)] + ["zzznotaterm"]
+    assert not set(terms) & set(topk_index.df_cache)
+    store = spark.sparkContext._jsc.sc().statusStore()
+    before = store.jobsList(None).size()
+    hits = search_wand(topk_index, terms, "disjunctive", 10)
+    rows = hits.collect()
+    none = search_wand(topk_index, ["zzznotaterm2"], "disjunctive", 10).collect()
+    assert store.jobsList(None).size() == before
+    assert len(rows) == 10 and none == []
+    assert "LocalTableScan" in formatted_plan(hits)
+
+
+def test_phrase_and_span_calls_run_no_lookup_job(spark, topk_index):
+    """Phrase and span queries look their terms' df up on the driver: the
+    call that builds the plan launches no Spark job."""
+    from lucene_solr_spark import fixtures
+    from lucene_solr_spark.search.phrase import (
+        search_phrase, span_first, span_not, span_or,
+    )
+
+    v = fixtures.make_vocab()
+    store = spark.sparkContext._jsc.sc().statusStore()
+    before = store.jobsList(None).size()
+    search_phrase(topk_index, [v[30], v[31]], k=10)
+    span_first(topk_index, v[32], end=3)
+    span_not(topk_index, v[33], v[34])
+    span_or(topk_index, [v[35], v[36]])
+    assert store.jobsList(None).size() == before
 
 
 def test_geo_cell_index_partition_pruning(spark, tmp_path):
@@ -357,17 +432,28 @@ def test_url_dedup_single_grouping_key_shuffle(spark):
     assert "HashAggregate" in plan
 
 
-def test_importance_broadcasts_ratio_table(spark):
+def test_importance_broadcasts_ratio_table(spark, monkeypatch):
     """importance_weights joins the per-term log-ratio table onto the
     exploded token stream as a BROADCAST — shuffling the token stream
-    by term would be the 100 TB mistake."""
+    by term would be the 100 TB mistake. The join feeds the importance
+    ranking, whose doc-id checkpoint hides it from the result's plan, so
+    the plan checked is the one with_doc_ids ranks."""
     from pyspark.sql import functions as F
 
+    from lucene_solr_spark.index import docid
     from lucene_solr_spark.operators.importance import importance_weights
 
+    ranked_plans = []
+
+    def with_doc_ids(df, *args, **kwargs):
+        ranked_plans.append(formatted_plan(df))
+        return rank(df, *args, **kwargs)
+
+    rank = docid.with_doc_ids
+    monkeypatch.setattr(docid, "with_doc_ids", with_doc_ids)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(200)
-    out = importance_weights(docs, F.col("doc_id") % 5 == 0)
-    plan = formatted_plan(out)
+    importance_weights(docs, F.col("doc_id") % 5 == 0)
+    [plan] = ranked_plans
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" in plan, plan
 
 

@@ -101,24 +101,26 @@ def _assert_golden(index):
             assert np.float32(g["score"]) == np.float32(e["score"]), f"{qid} rank {i}"
 
 
-def test_wand_matches_golden(seg_index):
-    _assert_golden(seg_index)
+def test_wand_matches_golden(seg_index, wand_legs):
+    for _ in wand_legs():
+        _assert_golden(seg_index)
 
 
-def test_wand_msm_dismax_vs_bruteforce(seg_index, tiny_index):
+def test_wand_msm_dismax_vs_bruteforce(seg_index, tiny_index, wand_legs):
     from lucene_solr_spark import fixtures
 
     vocab = fixtures.make_vocab()
     terms = [vocab[0], vocab[3], vocab[11], vocab[40]]
-    for kwargs in (
-        {"mode": "disjunctive", "min_should_match": 2},
-        {"mode": "dismax"},
-    ):
-        w = search_wand(seg_index, terms, k=10, **kwargs).collect()
-        bf = search_bruteforce(tiny_index, terms, k=10, **kwargs).collect()
-        assert [(r["doc_id"], np.float32(r["score"])) for r in w] == [
-            (r["doc_id"], np.float32(r["score"])) for r in bf
-        ], kwargs
+    for leg in wand_legs():
+        for kwargs in (
+            {"mode": "disjunctive", "min_should_match": 2},
+            {"mode": "dismax"},
+        ):
+            w = search_wand(seg_index, terms, k=10, **kwargs).collect()
+            bf = search_bruteforce(tiny_index, terms, k=10, **kwargs).collect()
+            assert [(r["doc_id"], np.float32(r["score"])) for r in w] == [
+                (r["doc_id"], np.float32(r["score"])) for r in bf
+            ], (leg, kwargs)
 
 
 def test_resume_from_checkpoint(spark, tiny_corpus, tmp_path_factory):
@@ -263,7 +265,7 @@ def test_resume_refuses_segment_of_other_codec(spark, tiny_corpus, tmp_path):
         )
 
 
-def test_search_after_pagination(seg_index, tiny_index):
+def test_search_after_pagination(seg_index, tiny_index, wand_legs):
     """searchAfter cursor: page 2 = hits strictly after page 1's bottom;
     pages concatenate to the unpaged top-k (IndexSearcher.searchAfter /
     CursorMark semantics), identical in pruned and brute-force paths."""
@@ -271,17 +273,21 @@ def test_search_after_pagination(seg_index, tiny_index):
 
     vocab = fixtures.make_vocab()
     terms = [vocab[0], vocab[3], vocab[11]]
-    page1 = search_wand(seg_index, terms, "disjunctive", 5).collect()
-    anchor = (float(page1[-1]["score"]), int(page1[-1]["doc_id"]))
-    page2 = search_wand(seg_index, terms, "disjunctive", 5, after=anchor).collect()
-    bf2 = search_bruteforce(tiny_index, terms, "disjunctive", 5, after=anchor).collect()
-    assert [(r["doc_id"], np.float32(r["score"])) for r in page2] == [
-        (r["doc_id"], np.float32(r["score"])) for r in bf2
-    ]
-    full = search_wand(seg_index, terms, "disjunctive", 10).collect()
-    assert [r["doc_id"] for r in page1] + [r["doc_id"] for r in page2] == [
-        r["doc_id"] for r in full
-    ]
+    bf2 = None
+    for leg in wand_legs():
+        page1 = search_wand(seg_index, terms, "disjunctive", 5).collect()
+        anchor = (float(page1[-1]["score"]), int(page1[-1]["doc_id"]))
+        page2 = search_wand(seg_index, terms, "disjunctive", 5, after=anchor).collect()
+        bf2 = bf2 or search_bruteforce(
+            tiny_index, terms, "disjunctive", 5, after=anchor
+        ).collect()
+        assert [(r["doc_id"], np.float32(r["score"])) for r in page2] == [
+            (r["doc_id"], np.float32(r["score"])) for r in bf2
+        ], leg
+        full = search_wand(seg_index, terms, "disjunctive", 10).collect()
+        assert [r["doc_id"] for r in page1] + [r["doc_id"] for r in page2] == [
+            r["doc_id"] for r in full
+        ], leg
 
 
 def test_per_term_boosts(seg_index, tiny_index):
