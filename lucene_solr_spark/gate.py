@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .functions.smallfloat import byte4_to_int
-from .index.builder import build_index, simple_tokens
+from .index.builder import simple_tokens
 from .search.bruteforce import search_bruteforce
 
 # Final driver-registered maps (curated in gate_suites.py: the driver
@@ -64,17 +64,30 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _gate_index(docs: DataFrame, index_positions: bool = False):
+    """Simple-analyzer segmented index over (doc_id, text) rows whose
+    doc_id is trusted as is, built into a fresh temp dir."""
+    import tempfile
+
+    from .index.segments import build_segmented_index
+
+    return build_segmented_index(
+        docs,
+        tempfile.mkdtemp(prefix="lss_gate_idx_"),
+        num_segments=8,
+        seg_group_size=2,
+        n_buckets=8,
+        analyzer="simple",
+        id_col="doc_id",
+        index_positions=index_positions,
+    )
+
+
 def docs_index(spark: SparkSession, sf_dir: str):
     """Inverted index over the documents table (simple analyzer,
-    pre-existing dense doc_id), cached per sf_dir within the process."""
-    key = ("docs", sf_dir)
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = build_index(
-            load(spark, sf_dir, "documents").select("doc_id", "text"),
-            analyzer="simple",
-            id_col="doc_id",
-        )
-    return _INDEX_CACHE[key]
+    pre-existing dense doc_id): the positional build of docs_pos_index,
+    so each sf_dir is indexed once per process."""
+    return docs_pos_index(spark, sf_dir)
 
 
 def docs_title_index(spark: SparkSession, sf_dir: str):
@@ -82,8 +95,6 @@ def docs_title_index(spark: SparkSession, sf_dir: str):
     8 analyzed tokens (a deterministic field projection both engines
     derive identically). Own df/avgdl/norm statistics — the reference's
     per-field semantics for multi-field (qf) queries."""
-    from .index.builder import simple_tokens
-
     key = ("docs_title", sf_dir)
     if key not in _INDEX_CACHE:
         docs = load(spark, sf_dir, "documents").select(
@@ -92,29 +103,17 @@ def docs_title_index(spark: SparkSession, sf_dir: str):
                 " ", F.slice(simple_tokens("text"), 1, 8)
             ).alias("text"),
         )
-        _INDEX_CACHE[key] = build_index(
-            docs, analyzer="simple", id_col="doc_id"
-        )
+        _INDEX_CACHE[key] = _gate_index(docs)
     return _INDEX_CACHE[key]
 
 
 def docs_pos_index(spark: SparkSession, sf_dir: str):
     """Positional segmented index over the documents table (simple
-    analyzer) — backs the index-side phrase gates; cached per sf_dir."""
-    import tempfile
-
-    from .index.segments import build_segmented_index
-
+    analyzer) — backs the term and phrase gates; cached per sf_dir."""
     key = ("docs_pos", sf_dir)
     if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = build_segmented_index(
+        _INDEX_CACHE[key] = _gate_index(
             load(spark, sf_dir, "documents").select("doc_id", "text"),
-            tempfile.mkdtemp(prefix="lss_gate_posidx_"),
-            num_segments=8,
-            seg_group_size=2,
-            n_buckets=8,
-            analyzer="simple",
-            id_col="doc_id",
             index_positions=True,
         )
     return _INDEX_CACHE[key]
@@ -423,21 +422,16 @@ def fts_multireader_shards(spark, sf_dir):
     of the union, which is exactly what the oracle computes (reference
     lucene/core/.../index/MultiReader.java, BaseCompositeReader.java:
     31-58; Solr ExactStatsCache global IDF)."""
-    from .index.builder import build_index
     from .search.multireader import multi_reader
 
     key = ("docs_shards", sf_dir)
     if key not in _INDEX_CACHE:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        s1 = build_index(
-            docs.filter(F.col("doc_id") < 250),
-            analyzer="simple", id_col="doc_id",
-        )
-        s2 = build_index(
+        s1 = _gate_index(docs.filter(F.col("doc_id") < 250))
+        s2 = _gate_index(
             docs.filter(F.col("doc_id") >= 250).withColumn(
                 "doc_id", F.col("doc_id") - 250
-            ),
-            analyzer="simple", id_col="doc_id",
+            )
         )
         _INDEX_CACHE[key] = multi_reader([s1, s2])
     comp = _INDEX_CACHE[key]

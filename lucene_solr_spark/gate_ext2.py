@@ -7630,8 +7630,9 @@ def fts_interval_prefix(spark, sf_dir):
     (reference Intervals.java:155-160, MultiTermIntervalsSource.java —
     automaton ∩ terms enum), then the standard minimal ordered
     evaluation runs; idf sums over every expanded term + 'table'
-    (search/intervals.py expand_multiterm — one pruned dictionary
-    pull, the expansion never touches postings it doesn't match)."""
+    (search/intervals.py expand_multiterm — one prefix-filtered
+    driver-side dictionary scan, the expansion never touches postings
+    it doesn't match)."""
     from .search.intervals import ordered, prefix
 
     return _iv(spark, sf_dir, ordered(prefix("s"), "table"))

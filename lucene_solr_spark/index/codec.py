@@ -31,6 +31,7 @@ __all__ = [
     "encode_payload",
     "decode_payload",
     "decode_payloads",
+    "decode_blocks",
     "encode_posting_blocks",
     "encode_blocks_table",
     "decode_block",
@@ -262,6 +263,31 @@ def decode_payloads(buffers: List[bytes]) -> np.ndarray:
         if parts[i] is None:  # empty payloads
             parts[i] = np.empty(0, dtype=np.uint64)
     return np.concatenate(parts) if parts else np.empty(0, dtype=np.uint64)
+
+
+def decode_blocks(counts, docs: List[bytes], freqs: List[bytes],
+                  norms: List[bytes], positions: List[bytes] | None = None):
+    """Many posting blocks → their postings concatenated in block order:
+    (doc_ids, freqs, norm_bytes, positions), int64 arrays. ``counts`` is
+    each block's n_docs; the other arguments are the blocks' payload
+    columns. Doc gaps restart at each block's absolute first doc (a
+    segmented cumsum). ``positions`` come back as absolute in-doc
+    offsets in posting order, or None when no block stores any. The
+    merge and the postings view (segments.py) both decode here."""
+    counts = np.asarray(counts, dtype=np.int64)
+    gaps = decode_payloads(docs).astype(np.int64)
+    fq = decode_payloads(freqs).astype(np.int64)
+    nb = np.frombuffer(b"".join(norms), dtype=np.uint8).astype(np.int64)
+    starts = np.cumsum(counts) - counts
+    cs = np.cumsum(gaps)
+    doc_ids = cs - np.repeat(cs[starts] - gaps[starts], counts)
+    pos_concat = b"".join(positions) if positions is not None else b""
+    if not pos_concat:
+        return doc_ids, fq, nb, None
+    pos_gaps = decode_vints(pos_concat).astype(np.int64)
+    pstarts = np.cumsum(fq) - fq
+    pcs = np.cumsum(pos_gaps)
+    return doc_ids, fq, nb, pcs - np.repeat(pcs[pstarts] - pos_gaps[pstarts], fq)
 
 
 def decode_block(docs_bytes: bytes, freqs_bytes: bytes) -> Tuple[np.ndarray, np.ndarray]:

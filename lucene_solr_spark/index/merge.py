@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.hashing import h60
-from .codec import decode_payloads, decode_vints, encode_blocks_table
+from .codec import decode_blocks, encode_blocks_table
 
 __all__ = ["merge_segments", "MERGED_POSTING_SCHEMA", "term_bucket_col"]
 
@@ -83,7 +83,7 @@ def _merge_group(tbl: pa.Table) -> pa.Table:
     postings are sorted by (term, doc). Arrow end-to-end — term codes via C++
     dictionary_encode, block payloads batch-decoded per payload class
     (one varint pass over concatenated varint bodies; one
-    unpackbits+matmul per distinct FOR bit width — codec.decode_payloads)."""
+    unpackbits+matmul per distinct FOR bit width — codec.decode_blocks)."""
     bucket = tbl.column("term_bucket")[0].as_py()
     seg_group = tbl.column("seg_group")[0].as_py()
     order = pc.sort_indices(
@@ -95,39 +95,23 @@ def _merge_group(tbl: pa.Table) -> pa.Table:
     codes = dict_enc.indices.to_numpy().astype(np.int64)
     uniques = np.asarray(dict_enc.dictionary.to_pylist(), dtype=object)
 
-    def _concat_bin(col):
-        return b"".join(tbl.column(col).to_pylist())
-
-    gaps = decode_payloads(tbl.column("docs").to_pylist()).astype(np.int64)
-    freqs = decode_payloads(tbl.column("freqs").to_pylist()).astype(np.int64)
-    norms = np.frombuffer(_concat_bin("norms"), dtype=np.uint8).astype(np.int64)
-    # segmented cumsum: absolute doc at each block start
-    starts = np.zeros(len(counts), dtype=np.int64)
-    np.cumsum(counts[:-1], out=starts[1:])
-    cs = np.cumsum(gaps)
-    base = np.repeat(cs[starts] - gaps[starts], counts)
-    docs = cs - base
+    # positions (if indexed) come back absolute per posting and are
+    # re-encoded under the new block boundaries. Input blocks arrive
+    # sorted by (term, first_doc) and postings within a block are
+    # doc-ascending, so the decoded occurrence stream follows the
+    # decoded posting order.
+    docs, freqs, norms, positions = decode_blocks(
+        counts, *(tbl.column(c).to_pylist()
+                  for c in ("docs", "freqs", "norms", "positions"))
+    )
     flat_codes = np.repeat(codes, counts)
-    # positions (if indexed): decode the concatenated per-posting delta
-    # streams once, rebuild absolutes per posting, re-encode under the
-    # new block boundaries. Input blocks arrive sorted by (term,
-    # first_doc) and postings within a block are doc-ascending, so the
-    # concatenated occurrence stream follows the decoded posting order.
-    positions = None
-    pos_concat = _concat_bin("positions")
-    if len(pos_concat):
-        pos_gaps = decode_vints(pos_concat).astype(np.int64)
-        pstarts = np.zeros(len(freqs), dtype=np.int64)
-        np.cumsum(freqs[:-1], out=pstarts[1:])
-        pcs = np.cumsum(pos_gaps)
-        pbase = np.repeat(pcs[pstarts] - pos_gaps[pstarts], freqs)
-        positions = pcs - pbase
     # a resumed build can write a segment holding docs on both sides of a
     # committed one; merged in one group, their blocks overlap and the
     # (term, first_doc) block order leaves a term's postings unsorted
     if np.any((flat_codes[1:] == flat_codes[:-1]) & (docs[1:] < docs[:-1])):
         order = np.lexsort((docs, flat_codes))
         if positions is not None:
+            pstarts = np.cumsum(freqs) - freqs
             nf = freqs[order]
             new_starts = np.cumsum(nf) - nf
             positions = positions[

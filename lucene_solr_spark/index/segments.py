@@ -68,6 +68,32 @@ MANIFEST_SCHEMA = T.StructType(
     ]
 )
 
+POSTINGS_SCHEMA = "term string, doc_id long, norm_byte int, freq int"
+
+
+def _decode_postings(batches):
+    """mapInArrow body of ``SegmentedIndex.postings``: block rows (term,
+    n_docs, docs, freqs, norms) → one row per posting."""
+    import pyarrow as pa
+
+    from .codec import decode_blocks
+
+    for b in batches:
+        counts = b.column("n_docs").to_numpy()
+        docs, freqs, norms, _ = decode_blocks(
+            counts, *(b.column(c).to_pylist() for c in ("docs", "freqs", "norms"))
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                b.column("term").take(np.repeat(np.arange(len(counts)), counts)),
+                pa.array(docs, pa.int64()),
+                pa.array(norms.astype(np.int32), pa.int32()),
+                pa.array(freqs.astype(np.int32), pa.int32()),
+            ],
+            names=["term", "doc_id", "norm_byte", "freq"],
+        )
+
+
 def _encode_segment_arrow(tbl, seg_id: int, index_positions: bool = False):
     """One segment's Arrow table (doc_id, tokens, stored…) → (postings
     pa.Table, norms pa.Table, counters). All heavy steps are Arrow C++ /
@@ -262,16 +288,22 @@ def _committed_manifests(index_dir: str, segments: list) -> list:
 
 @dataclass
 class SegmentedIndex:
-    """The merged, at-rest index (SURVEY §7.1 step 4 output).
+    """The merged, at-rest index (SURVEY §7.1 step 4 output) — the one
+    index format every search path reads.
 
     The same merged files are read two ways. The DataFrames below feed
-    Spark plans that scale with the index. ``lookup_df`` and
-    ``read_blocks`` read ``merged_dir`` on the driver with
-    ``pyarrow.dataset`` and launch no Spark job: the first serves the
-    dictionary lookup every query makes, the second feeds top-k queries
-    small enough to score in-process (search/wand.py). Both prune to the
-    query terms' term_bucket directories and push the term filter into
-    the parquet scan."""
+    Spark plans that scale with the index: ``blocks`` the block-at-a-time
+    leaves (WAND, phrases, intervals), and ``postings``, a lazy decoded
+    view of the blocks, the relational query surface (brute-force,
+    Boolean executor, splitter, multi-reader, gates). ``lookup_df``,
+    ``read_blocks`` and ``terms_with_prefixes`` read ``merged_dir`` on
+    the driver with ``pyarrow.dataset`` and launch no Spark job: the
+    first serves the dictionary lookup every query makes, the second
+    feeds top-k queries small enough to score in-process
+    (search/wand.py), the third expands multi-term leaves
+    (search/intervals.py). The first two prune to the query terms'
+    term_bucket directories and push the term filter into the parquet
+    scan."""
 
     blocks: DataFrame      # merged posting blocks (term_bucket-partitioned)
     dictionary: DataFrame  # (term, df, cf)
@@ -323,6 +355,31 @@ class SegmentedIndex:
             for t in missing:
                 self.df_cache[t] = found.get(t)
         return {t: self.df_cache[t] for t in uniq if self.df_cache[t] is not None}
+
+    @cached_property
+    def postings(self) -> DataFrame:
+        """(term, doc_id, norm_byte, freq), one row per posting, decoded
+        from ``blocks`` by the codec's block decoder. Building it runs
+        no job."""
+        return self.blocks.select(
+            "term", "n_docs", "docs", "freqs", "norms"
+        ).mapInArrow(_decode_postings, POSTINGS_SCHEMA)
+
+    def terms_with_prefixes(self, prefixes) -> list:
+        """Sorted dictionary terms that start with any of ``prefixes``,
+        read on the driver with the prefix filter pushed into the scan
+        (an empty prefix matches every term)."""
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        prefixes = set(prefixes)
+        flt = None
+        if "" not in prefixes:
+            flt = reduce(operator.or_, (
+                pc.starts_with(ds.field("term"), pattern=p) for p in sorted(prefixes)
+            ))
+        tbl = self._dictionary_ds.to_table(columns=["term"], filter=flt)
+        return sorted(tbl["term"].to_pylist())
 
     def read_blocks(self, terms, columns):
         """The posting blocks of ``terms`` as a pyarrow Table holding only
@@ -482,8 +539,10 @@ def read_segmented_index(spark: SparkSession, index_dir: str) -> SegmentedIndex:
     ]
     return SegmentedIndex(
         blocks=spark.read.parquet(f"{index_dir}/{merged}/postings"),
-        dictionary=spark.read.parquet(f"{index_dir}/{merged}/dictionary"),
-        norms=spark.read.parquet(*norm_paths),
+        dictionary=spark.read.parquet(f"{index_dir}/{merged}/dictionary").select(
+            "term", "df", "cf"
+        ),
+        norms=spark.read.parquet(*norm_paths).select("doc_id", "dl", "norm_byte"),
         stored=spark.read.parquet(f"{index_dir}/stored"),
         merged_dir=f"{index_dir}/{merged}",
         doc_count=stats["doc_count"],

@@ -16,30 +16,61 @@ Reference: lucene/misc/src/java/org/apache/lucene/index/
   (:93-96).
 
 Spark-first realization: a split never touches text — it filters the
-at-rest postings/norms/docmap/stored tables by a doc predicate and
-recomputes the derived statistics (dictionary df/cf via one hash
-aggregation over the filtered postings; doc_count/sumTTF via one
-aggregate over the filtered norms), which is exactly the state the
-reference's deletes-then-merge produces. Per-doc data (freq, positions,
-norm bytes, stored fields) is carried over untouched.
+index's postings relation and its norms/stored tables by a doc
+predicate and recomputes the derived statistics (dictionary df/cf via
+one hash aggregation over the filtered postings; doc_count/sumTTF via
+one aggregate over the filtered norms), which is exactly the state the
+reference's deletes-then-merge produces. Per-doc data (freq, norm
+bytes, stored fields) is carried over untouched.
 
 Scale shape: each part is one filtered scan + one partial/final
-aggregation — no re-tokenization, no driver data, and the doc
-predicate pushes into the parquet scan of every table.
+aggregation — no re-tokenization, no driver data. The doc predicate
+pushes into the parquet scans of norms and stored; on a SegmentedIndex
+it filters the postings after the block decode.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .builder import IndexTables
+__all__ = [
+    "IndexTables", "filter_index", "pk_index_splitter",
+    "multi_pass_index_splitter", "merge_indexes",
+]
 
-__all__ = ["filter_index", "pk_index_splitter", "multi_pass_index_splitter", "merge_indexes"]
+
+@dataclass
+class IndexTables:
+    """A derived index — a split part, a materialized merge, or a
+    multi-reader composite (search/multireader.py) — as the relations a
+    query reads; a SegmentedIndex exposes the same attributes, so every
+    relational searcher takes either.
+
+    postings  : (term, doc_id, norm_byte, freq) — norm_byte rides on
+                every posting (the impact-postings layout), so scoring
+                never joins norms
+    dictionary: (term, df, cf)
+    norms     : (doc_id, dl, norm_byte)
+    stored    : source rows + doc_id
+    doc_count : docs with the field (>= 1 token)
+    sum_total_term_freq : total token count
+    max_doc   : doc id space size
+    """
+
+    postings: DataFrame
+    dictionary: DataFrame
+    norms: DataFrame
+    stored: DataFrame
+    doc_count: int
+    sum_total_term_freq: int
+    max_doc: int
 
 
-def filter_index(tables: IndexTables, keep: Column) -> IndexTables:
-    """A child IndexTables containing exactly the parent docs where
+def filter_index(tables, keep: Column) -> IndexTables:
+    """A child index containing exactly the parent docs where
     ``keep`` (a predicate over doc_id) holds, with statistics
     recomputed to match an index that only ever held those docs."""
     postings = tables.postings.filter(keep)
@@ -52,20 +83,18 @@ def filter_index(tables: IndexTables, keep: Column) -> IndexTables:
         F.sum("dl").alias("sum_ttf"),
         F.count("*").alias("max_doc"),
     ).collect()[0]
-    child = IndexTables(
+    return IndexTables(
         postings=postings,
         dictionary=dictionary,
         norms=norms,
-        docmap=tables.docmap.filter(keep),
         stored=tables.stored.filter(keep),
         doc_count=int(stats["doc_count"] or 0),
         sum_total_term_freq=int(stats["sum_ttf"] or 0),
+        max_doc=int(stats["max_doc"] or 0),
     )
-    child.set_max_doc(int(stats["max_doc"] or 0))
-    return child
 
 
-def pk_index_splitter(tables: IndexTables, docs_in_first: Column):
+def pk_index_splitter(tables, docs_in_first: Column):
     """PKIndexSplitter: (matching, complement) child indexes."""
     return (
         filter_index(tables, docs_in_first),
@@ -73,9 +102,7 @@ def pk_index_splitter(tables: IndexTables, docs_in_first: Column):
     )
 
 
-def multi_pass_index_splitter(
-    tables: IndexTables, num_parts: int, seq: bool = False
-):
+def multi_pass_index_splitter(tables, num_parts: int, seq: bool = False):
     """MultiPassIndexSplitter: ``num_parts`` child indexes by
     sequential docID range (last part takes the rounding remainder) or
     round-robin on docID."""
@@ -121,7 +148,7 @@ def merge_indexes(shards) -> IndexTables:
         )
 
     base = 0
-    postings = norms = docmap = stored = None
+    postings = norms = stored = None
     for sh in shards:
         top = sh.norms.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
         declared = sh.max_doc
@@ -131,23 +158,20 @@ def merge_indexes(shards) -> IndexTables:
                 "doc ids are not dense 0-based — rebasing would collide"
             )
         p, n = rebase(sh.postings, base), rebase(sh.norms, base)
-        d, s = rebase(sh.docmap, base), rebase(sh.stored, base)
+        s = rebase(sh.stored, base)
         postings = p if postings is None else postings.unionByName(p)
         norms = n if norms is None else norms.unionByName(n)
-        docmap = d if docmap is None else docmap.unionByName(d)
         stored = s if stored is None else stored.unionByName(s)
         base += declared
     dictionary = postings.groupBy("term").agg(
         F.count("*").alias("df"), F.sum("freq").alias("cf")
     )
-    merged = IndexTables(
+    return IndexTables(
         postings=postings,
         dictionary=dictionary,
         norms=norms,
-        docmap=docmap,
         stored=stored,
         doc_count=sum(sh.doc_count for sh in shards),
         sum_total_term_freq=sum(sh.sum_total_term_freq for sh in shards),
+        max_doc=base,
     )
-    merged.set_max_doc(base)
-    return merged

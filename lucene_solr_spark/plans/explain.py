@@ -70,25 +70,21 @@ def unpartitioned_windows(df: DataFrame) -> list:
     ``partitionSpec().isEmpty()``) — robust against explain-string
     formatting, and sees through Project/Filter/Join nesting.
 
-    One principled carve-out: a Window whose input subtree contains a
-    GlobalLimit is BOUNDED — ranking the k survivors of an
-    orderBy().limit(k) (TakeOrderedAndProject) is the TopDocs.merge
-    tiny-merge itself, O(k) regardless of corpus size — and is not
-    reported.
+    One principled carve-out: a Window whose input is a limit, reached
+    through Project/Filter nodes only, is BOUNDED — ranking the k
+    survivors of an orderBy().limit(k) (TakeOrderedAndProject) is the
+    TopDocs.merge tiny-merge itself, O(k) regardless of corpus size —
+    and is not reported. A limit anywhere else below (under a Join or
+    an Aggregate, say) bounds nothing the Window sees.
     """
     hits: list = []
     seen: set = set()
 
-    def subtree_has_limit(node) -> bool:
-        if node.getClass().getSimpleName() in (
-            "GlobalLimit",
-            "LocalLimit",
-        ):
-            return True
-        for i in range(node.children().size()):
-            if subtree_has_limit(node.children().apply(i)):
-                return True
-        return False
+    def input_is_limit(node) -> bool:
+        child = node.children().apply(0)
+        while child.getClass().getSimpleName() in ("Project", "Filter"):
+            child = child.children().apply(0)
+        return child.getClass().getSimpleName() in ("GlobalLimit", "LocalLimit")
 
     def walk(node) -> None:
         oid = node.hashCode()
@@ -97,9 +93,7 @@ def unpartitioned_windows(df: DataFrame) -> list:
             return
         seen.add((node.getClass().getName(), oid))
         if node.getClass().getSimpleName() == "Window":
-            if node.partitionSpec().isEmpty() and not subtree_has_limit(
-                node
-            ):
+            if node.partitionSpec().isEmpty() and not input_is_limit(node):
                 hits.append(node.toString().splitlines()[0][:300])
         for i in range(node.children().size()):
             walk(node.children().apply(i))

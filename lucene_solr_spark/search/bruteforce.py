@@ -74,11 +74,6 @@ def search_bruteforce(
     if precision != "double":
         tf = tf.cast("float")
     scored = tables.postings.join(F.broadcast(weights_df), "term")
-    if "norm_byte" not in tables.postings.columns:
-        # legacy layout without per-posting norms: join the norms table
-        scored = scored.join(
-            tables.norms.select("doc_id", "norm_byte"), "doc_id"
-        )
     scored = scored.join(F.broadcast(cache_df), "norm_byte").withColumn(
         "term_score", F.col("weight") * tf
     )

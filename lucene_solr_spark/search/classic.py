@@ -71,10 +71,6 @@ def search_classic(
         tables.postings.filter(F.col("term").isin([t for t, _ in weights]))
         .join(F.broadcast(weights_df), "term")
     )
-    if "norm_byte" not in tables.postings.columns:
-        scored = scored.join(
-            tables.norms.select("doc_id", "norm_byte"), "doc_id"
-        )
     scored = scored.join(F.broadcast(cache_df), "norm_byte")
     out = (
         scored.withColumn(

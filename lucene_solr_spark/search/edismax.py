@@ -65,10 +65,6 @@ def edismax(
             tbl.postings.filter(F.col("term").isin(list(terms)))
             .join(F.broadcast(weights_df), "term")
         )
-        if "norm_byte" not in tbl.postings.columns:
-            scored = scored.join(
-                tbl.norms.select("doc_id", "norm_byte"), "doc_id"
-            )
         scored = scored.join(F.broadcast(cache_df), "norm_byte")
         frames.append(
             scored.select(

@@ -4,8 +4,9 @@ The query-lifecycle glue (reference: search/IndexSearcher.java:533-613 —
 createWeight → per-segment scorers → TopDocs merge; clause wiring
 search/Boolean2ScorerSupplier.java:106-174):
 
-- term clauses score via the exact-BM25 brute-force scorer over the flat
-  index tables (SQL-oracle-reproducible in double precision),
+- term clauses score via the exact-BM25 brute-force scorer over the
+  index's postings relation (SQL-oracle-reproducible in double
+  precision),
 - phrase clauses ("…" / "…"~n) are REQUIRED and score via the positional
   segmented index (search/phrase.py),
 - must_not excludes via anti-join (ReqExclScorer),
@@ -51,7 +52,9 @@ def execute_parsed(
 ) -> DataFrame:
     """Run a classic query string end-to-end.
 
-    tables: flat IndexTables (term scoring + must_not).
+    tables: the index whose postings relation scores term clauses and
+    must_not (a SegmentedIndex, or an IndexTables from splitter/
+    multireader).
     pos_index: positional SegmentedIndex — required iff the query has
     phrase clauses.
     stored: (doc_id, <metadata fields…>) — required iff the query has
@@ -257,10 +260,6 @@ def _execute_general(
         if precision != "double":
             tf = tf.cast("float")
         scoring = tables.postings.join(F.broadcast(weights_df), "term")
-        if "norm_byte" not in tables.postings.columns:
-            scoring = scoring.join(
-                tables.norms.select("doc_id", "norm_byte"), "doc_id"
-            )
         scoring = scoring.join(F.broadcast(cache_df), "norm_byte").select(
             "doc_id", "term", (F.col("weight") * tf).alias("term_score")
         )

@@ -114,10 +114,6 @@ def fuzzy_scored(
         )
         .join(F.broadcast(weights_df), "term")
     )
-    if "norm_byte" not in tables.postings.columns:
-        scored = scored.join(
-            tables.norms.select("doc_id", "norm_byte"), "doc_id"
-        )
     scored = scored.join(F.broadcast(cache_df), "norm_byte").withColumn(
         "term_score", F.col("weight") * tf
     )

@@ -53,6 +53,7 @@ IntervalQuery's saturation function (the match SET is the module's).
 
 from __future__ import annotations
 
+import re
 from bisect import bisect_left
 from typing import Sequence
 
@@ -455,8 +456,6 @@ def expand_multiterm(expr, dict_terms):
     (MultiTermIntervalsSource rewrites against the terms enum). An
     expansion with no matching term becomes a never-matching empty
     disjunction, exactly like an absent term leaf."""
-    import re as _re
-
     k = expr[0]
     if k == "term":
         return expr
@@ -464,8 +463,8 @@ def expand_multiterm(expr, dict_terms):
         hits = [t for t in dict_terms if t.startswith(expr[1])]
         return ("or", [("term", t) for t in hits])
     if k == "wildcard":
-        rx = _re.compile(
-            "^" + _re.escape(expr[1])
+        rx = re.compile(
+            "^" + re.escape(expr[1])
             .replace(r"\*", "[a-z0-9]*").replace(r"\?", "[a-z0-9]")
             + "$"
         )
@@ -485,21 +484,27 @@ def expand_multiterm(expr, dict_terms):
             expand_multiterm(expr[2], dict_terms))
 
 
-def _has_multiterm(expr) -> bool:
+def _multiterm_prefixes(expr) -> set:
+    """The literal prefix of every prefix/wildcard leaf in ``expr`` (a
+    wildcard's text before its first ``*`` or ``?``)."""
     k = expr[0]
-    if k in ("prefix", "wildcard"):
-        return True
+    if k == "prefix":
+        return {expr[1]}
+    if k == "wildcard":
+        return {re.split(r"[*?]", expr[1], maxsplit=1)[0]}
     if k == "term":
-        return False
+        return set()
     if k in ("ordered", "unordered", "or", "block"):
-        return any(_has_multiterm(s) for s in expr[1])
-    if k in ("maxgaps", "maxwidth"):
-        return _has_multiterm(expr[2])
-    if k == "at_least":
-        return any(_has_multiterm(s) for s in expr[2])
-    if k in ("within", "not_within"):
-        return _has_multiterm(expr[1]) or _has_multiterm(expr[3])
-    return _has_multiterm(expr[1]) or _has_multiterm(expr[2])
+        subs = expr[1]
+    elif k in ("maxgaps", "maxwidth"):
+        subs = [expr[2]]
+    elif k == "at_least":
+        subs = expr[2]
+    elif k in ("within", "not_within"):
+        subs = [expr[1], expr[3]]
+    else:
+        subs = [expr[1], expr[2]]
+    return set().union(*(_multiterm_prefixes(s) for s in subs))
 
 
 def interval_query(
@@ -516,14 +521,12 @@ def interval_query(
     count, scored per the pinned span contract (see module doc)."""
     from .phrase import _run_span
 
-    if _has_multiterm(expr):
-        # one pruned dictionary pull resolves every multi-term leaf
-        # (the automaton-vs-terms-enum intersection analog)
-        dict_terms = [
-            r["term"]
-            for r in index.dictionary.select("term").collect()
-        ]
-        expr = expand_multiterm(expr, sorted(dict_terms))
+    prefixes = _multiterm_prefixes(expr)
+    if prefixes:
+        # one driver-side dictionary scan, filtered to the leaves' literal
+        # prefixes, resolves every multi-term leaf (the automaton-vs-
+        # terms-enum intersection analog)
+        expr = expand_multiterm(expr, index.terms_with_prefixes(prefixes))
 
     terms_all = list(dict.fromkeys(leaf_terms(expr)))
     required = sorted(required_terms(expr))

@@ -13,22 +13,23 @@ distributed-search contract when global IDF is enabled
 Spark-first: each shard's tables are plain DataFrames, so the
 composite is a UNION with a docBase offset column — the dictionary
 re-aggregates (sum df/cf per term) and the scalar stats add. The
-result is a regular IndexTables: every searcher in the engine works
-on it unchanged, and the parity invariant (shard-composite ==
-single-index-of-the-union) is gate-checked.
+result is an IndexTables (index/splitter.py) with the relations of a
+single index: every relational searcher works on it unchanged, and the
+parity invariant (shard-composite == single-index-of-the-union) is
+gate-checked.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..index.builder import IndexTables
+from ..index.splitter import IndexTables
 
 __all__ = ["multi_reader"]
 
 
 def multi_reader(shards) -> IndexTables:
-    """Compose per-shard IndexTables into one logical index.
+    """Compose per-shard indexes into one logical index.
 
     Doc ids are offset by each shard's docBase = Σ max_doc of prior
     shards (BaseCompositeReader starts[]). A shard's declared max_doc
@@ -43,10 +44,6 @@ def multi_reader(shards) -> IndexTables:
     base = 0
     for i, sh in enumerate(shards):
         bases.append(base)
-        try:
-            declared = sh.max_doc
-        except AttributeError:
-            declared = None
         row = sh.norms.agg(
             F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
         ).collect()[0]
@@ -57,13 +54,13 @@ def multi_reader(shards) -> IndexTables:
                 f"multi_reader shard {i}: negative doc_id {lo} would "
                 "collide with the previous shard's id range"
             )
-        if declared is not None and actual > int(declared):
+        if actual > sh.max_doc:
             raise ValueError(
                 f"multi_reader shard {i}: max(doc_id)+1={actual} exceeds "
-                f"declared max_doc={declared}; doc ids are not dense "
+                f"declared max_doc={sh.max_doc}; doc ids are not dense "
                 "0-based, refusing to compose overlapping id ranges"
             )
-        base += max(int(declared or 0), actual)
+        base += max(sh.max_doc, actual)
 
     def offset(df, b):
         return df.withColumn(
@@ -72,16 +69,13 @@ def multi_reader(shards) -> IndexTables:
 
     postings = None
     norms = None
-    docmap = None
     stored = None
     for sh, b in zip(shards, bases):
         p = offset(sh.postings, b)
         n = offset(sh.norms, b)
-        d = offset(sh.docmap, b)
         s = offset(sh.stored, b)
         postings = p if postings is None else postings.unionByName(p)
         norms = n if norms is None else norms.unionByName(n)
-        docmap = d if docmap is None else docmap.unionByName(d)
         stored = s if stored is None else stored.unionByName(s)
 
     dictionary = None
@@ -92,14 +86,12 @@ def multi_reader(shards) -> IndexTables:
         F.sum("df").alias("df"), F.sum("cf").alias("cf")
     )
 
-    out = IndexTables(
+    return IndexTables(
         postings=postings,
         dictionary=dictionary,
         norms=norms,
-        docmap=docmap,
         stored=stored,
         doc_count=sum(sh.doc_count for sh in shards),
         sum_total_term_freq=sum(sh.sum_total_term_freq for sh in shards),
+        max_doc=base,
     )
-    out.set_max_doc(base)
-    return out

@@ -379,10 +379,6 @@ def search_similarity(
     scored = tables.postings.filter(F.col("term").isin(uniq)).join(
         F.broadcast(tables.dictionary.select("term", "df", "cf")), "term"
     )
-    if "norm_byte" not in tables.postings.columns:
-        scored = scored.join(
-            tables.norms.select("doc_id", "norm_byte"), "doc_id"
-        )
     out = (
         scored.join(F.broadcast(decode), "norm_byte")
         .withColumn("term_score", F.expr(expr))

@@ -115,10 +115,6 @@ def execute_xml(
         if precision != "double":
             tf = tf.cast("float")
         scoring = tables.postings.join(F.broadcast(weights_df), "term")
-        if "norm_byte" not in tables.postings.columns:
-            scoring = scoring.join(
-                tables.norms.select("doc_id", "norm_byte"), "doc_id"
-            )
         scoring = scoring.join(F.broadcast(cache_df), "norm_byte").select(
             "doc_id", "term",
             (F.col("weight") * tf).cast("double").alias("term_score"),

@@ -5,18 +5,20 @@ query lifecycle (SURVEY §3.1: parse → rewrite → weight → score →
 collect; reference search/IndexSearcher.java:420-470, solr/core/.../
 handler/component/SearchHandler.java):
 
-    idx = Searcher.build(transcripts)          # or Searcher(tables, ...)
+    idx = Searcher.build(transcripts)          # or Searcher(index, ...)
     hits = idx.search('+spark merge -vector role:user', k=10)
     hits = idx.search('"slow query"~2 fast', k=10)     # needs positions
     idx.explain(["spark", "merge"])                     # debugQuery
     idx.highlight(hits, ["spark", "merge"])             # best fragments
 
 Everything returns DataFrames — the searcher composes plans, it never
-collects. For the 10^12-turn serving path use the segmented index +
-block-max WAND (index/segments.py + search/wand.py); this facade wraps
-the feature-complete flat-table engine that backs the full query
-grammar (filters, groups, phrases, ReqOptSum), exactly like Solr's
-request handler fronting the Lucene searcher.
+collects. ``build`` indexes the corpus once, into a segmented index
+(index/segments.py); term clauses score over its decoded postings
+relation and phrase clauses over its positional blocks. For the
+10^12-turn top-k serving path, block-max WAND (search/wand.py) reads
+the same index; this facade wraps the feature-complete engine that
+backs the full query grammar (filters, groups, phrases, ReqOptSum),
+exactly like Solr's request handler fronting the Lucene searcher.
 """
 
 from __future__ import annotations
@@ -24,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .index.builder import IndexTables, build_index
 from .search.executor import execute_parsed
 from .search.queryparser import parse_query
 
@@ -32,17 +33,19 @@ __all__ = ["Searcher"]
 
 
 class Searcher:
-    """Feature-complete search surface over flat index tables.
+    """Feature-complete search surface over one index.
 
-    tables: IndexTables (build_index output).
-    pos_index: optional positional SegmentedIndex — required for phrase
-    queries.  stored: defaults to ``tables.stored`` — the metadata
-    source for ``field:value`` / range filters."""
+    index: a SegmentedIndex (``build`` output), or an IndexTables from
+    index/splitter.py or search/multireader.py.
+    pos_index: positional SegmentedIndex — required for phrase queries;
+    ``build(with_positions=True)`` passes the index itself.
+    stored: defaults to ``index.stored`` — the metadata source for
+    ``field:value`` / range filters."""
 
-    def __init__(self, tables: IndexTables, pos_index=None, stored=None):
-        self.tables = tables
+    def __init__(self, index, pos_index=None, stored=None):
+        self.index = index
         self.pos_index = pos_index
-        self.stored = stored if stored is not None else tables.stored
+        self.stored = stored if stored is not None else index.stored
 
     @classmethod
     def build(
@@ -56,34 +59,22 @@ class Searcher:
         """Index a transcript-shaped DataFrame and open a searcher on it
         (IndexWriter.addDocuments + DirectoryReader.open in one step).
 
-        with_positions=True additionally builds a positional segmented
-        index (DOCS_AND_FREQS_AND_POSITIONS) under ``index_dir`` (a temp
-        dir if not given) and wires it in, so phrase queries work
-        straight off the build path."""
-        tables = build_index(
-            transcripts,
-            analyzer=analyzer,
-            with_positions=with_positions,
-            **kwargs,
-        )
-        pos_index = None
-        if with_positions:
+        One segmented index is built under ``index_dir`` (a temp dir if
+        not given); ``kwargs`` go to build_segmented_index.
+        with_positions=True stores positions in it
+        (DOCS_AND_FREQS_AND_POSITIONS), so phrase queries work straight
+        off the build path."""
+        from .index.segments import build_segmented_index
+
+        if index_dir is None:
             import tempfile
 
-            from .index.segments import build_segmented_index
-
-            seg_kwargs = {
-                k: v for k, v in kwargs.items()
-                if k in ("order_cols", "text_col", "id_col")
-            }
-            pos_index = build_segmented_index(
-                transcripts,
-                index_dir or tempfile.mkdtemp(prefix="lss_searcher_pos_"),
-                analyzer=analyzer,
-                index_positions=True,
-                **seg_kwargs,
-            )
-        return cls(tables, pos_index=pos_index)
+            index_dir = tempfile.mkdtemp(prefix="lss_searcher_")
+        index = build_segmented_index(
+            transcripts, index_dir, analyzer=analyzer,
+            index_positions=with_positions, **kwargs,
+        )
+        return cls(index, pos_index=index if with_positions else None)
 
     def parse(self, q: str):
         return parse_query(q)
@@ -133,7 +124,7 @@ class Searcher:
             mod = importlib.import_module(f".search.{mod_name}", __package__)
             hits = getattr(mod, fn_name)(
                 q,
-                self.tables,
+                self.index,
                 pos_index=self.pos_index,
                 k=k,
                 precision=precision,
@@ -154,7 +145,7 @@ class Searcher:
             ):
                 msm = calculate_min_should_match(len(p.should), mm)
                 hits = search_bruteforce(
-                    self.tables,
+                    self.index,
                     [t for t, _ in p.should],
                     mode="disjunctive",
                     k=None if p.must_not else k,
@@ -166,8 +157,8 @@ class Searcher:
                     # MUST_NOT still excludes under mm (ReqExclScorer):
                     # anti-join the prohibited terms' doc set, then
                     # re-apply the top-k cut
-                    excl = self.tables.postings.filter(
-                        self.tables.postings.term.isin(list(p.must_not))
+                    excl = self.index.postings.filter(
+                        self.index.postings.term.isin(list(p.must_not))
                     ).select("doc_id")
                     hits = hits.join(excl, "doc_id", "left_anti").orderBy(
                         F.desc("score"), F.asc("doc_id")
@@ -186,7 +177,7 @@ class Searcher:
             )
         hits = execute_parsed(
             q,
-            self.tables,
+            self.index,
             pos_index=self.pos_index,
             k=k,
             precision=precision,
@@ -202,7 +193,7 @@ class Searcher:
         """debugQuery: per-(doc, term) BM25 factor table."""
         from .search.explain import explain_scores
 
-        return explain_scores(self.tables, terms, **kwargs)
+        return explain_scores(self.index, terms, **kwargs)
 
     def rerank_expression(
         self,

@@ -27,11 +27,22 @@ def tiny_corpus():
 
 
 @pytest.fixture(scope="session")
-def tiny_index(spark, tiny_corpus):
-    from lucene_solr_spark.index.builder import build_index, transcripts_from_pandas
+def make_index(tmp_path_factory):
+    """``make_index(df, **kwargs)``: build_segmented_index of ``df`` into
+    a fresh temp dir."""
+    from lucene_solr_spark.index.segments import build_segmented_index
 
-    df = transcripts_from_pandas(spark, tiny_corpus)
-    return build_index(df, num_partitions=4)
+    def make(df, **kwargs):
+        return build_segmented_index(df, str(tmp_path_factory.mktemp("idx")), **kwargs)
+
+    return make
+
+
+@pytest.fixture(scope="session")
+def tiny_index(spark, tiny_corpus, make_index):
+    from lucene_solr_spark.index.builder import transcripts_from_pandas
+
+    return make_index(transcripts_from_pandas(spark, tiny_corpus), num_segments=4)
 
 
 @pytest.fixture(scope="session")

@@ -9,7 +9,6 @@ predicted class), lucene/monitor/src/test/.../TestMonitor.java
 import pytest
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.index.builder import build_index
 from lucene_solr_spark.operators.classify import (
     classify_naive_bayes,
     train_naive_bayes,
@@ -27,9 +26,9 @@ DOCS = [
 
 
 @pytest.fixture(scope="module")
-def idx_labels(spark):
+def idx_labels(make_index, spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string, label string")
-    idx = build_index(df.select("doc_id", "text"), analyzer="simple", id_col="doc_id")
+    idx = make_index(df.select("doc_id", "text"), analyzer="simple", id_col="doc_id")
     return idx, df.select("doc_id", "label")
 
 
@@ -101,10 +100,9 @@ def test_percolate_must_not_veto(spark):
         register_queries(spark, [("bad", ["a"], None, ["a"])])
 
 
-def test_ltr_linear_rerank(spark):
+def test_ltr_linear_rerank(make_index, spark):
     """LinearModel rerank flips the first-pass order when a shorter doc
     with more matched terms beats a higher-BM25 one on the model."""
-    from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.operators.ltr import ltr_rerank
 
     docs = spark.createDataFrame(
@@ -116,7 +114,7 @@ def test_ltr_linear_rerank(spark):
         ],
         "doc_id long, text string",
     )
-    tables = build_index(docs, analyzer="simple", id_col="doc_id")
+    tables = make_index(docs, analyzer="simple", id_col="doc_id")
     cand = spark.createDataFrame(
         [(0, 3.0), (1, 2.0), (2, 0.5)], "doc_id long, score double"
     )
@@ -132,11 +130,10 @@ def test_ltr_linear_rerank(spark):
     assert by_id[0]["n_matched"] == 2 and by_id[0]["max_tf"] == 4
 
 
-def test_seeded_result_clustering(spark):
+def test_seeded_result_clustering(make_index, spark):
     """Carrot2-analog assignment: docs go to the seed whose term vector
     they share most (cosine over integer tf), labels are the top terms
     per cluster."""
-    from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.operators.clustering import (
         cluster_labels, seeded_cluster_assign,
     )
@@ -151,7 +148,7 @@ def test_seeded_result_clustering(spark):
         ],
         "doc_id long, text string",
     )
-    tables = build_index(docs, analyzer="simple", id_col="doc_id")
+    tables = make_index(docs, analyzer="simple", id_col="doc_id")
     cand = docs.select("doc_id", F.lit(1.0).alias("score"))
     assign = seeded_cluster_assign(tables, cand, [0, 2])
     got = {r["doc_id"]: r["seed"] for r in assign.collect()}

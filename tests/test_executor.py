@@ -235,14 +235,12 @@ def test_absent_must_term_matches_nothing(spark, tiny_index):
     )
 
 
-def test_shared_term_satisfies_both_groups(spark):
+def test_shared_term_satisfies_both_groups(make_index, spark):
     """'(a b) AND (a c)': a doc containing only 'a' satisfies BOTH
     required disjunctions (one gid per term would wrongly exclude it)."""
     import pandas as pd
 
-    from lucene_solr_spark.index.builder import (
-        build_index, transcripts_from_pandas,
-    )
+    from lucene_solr_spark.index.builder import transcripts_from_pandas
 
     rows = [
         ("c0", 0, "u", "aaa xonly words here", None),   # only shared term
@@ -255,9 +253,9 @@ def test_shared_term_satisfies_both_groups(spark):
     )
     pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
     pdf["ts"] = pd.Timestamp("2026-01-01", tz="UTC")
-    idx = build_index(
+    idx = make_index(
         transcripts_from_pandas(spark, pdf), analyzer="simple",
-        num_partitions=2,
+        num_segments=2,
     )
     by_conv = {
         r["conv_id"]: r["doc_id"]
@@ -439,11 +437,10 @@ def test_query_elevation(spark):
     assert [r["doc_id"] for r in got2] == [5, 1, 2]
 
 
-def test_covering_query_per_doc_msm(spark):
+def test_covering_query_per_doc_msm(make_index, spark):
     """CoveringQuery: the min-should-match threshold varies per doc —
     a doc matching 2 clauses passes when its threshold is 2 but a doc
     with threshold 3 needs all three."""
-    from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.search.covering import covering_query
 
     docs = spark.createDataFrame(
@@ -455,7 +452,7 @@ def test_covering_query_per_doc_msm(spark):
         ],
         "doc_id long, text string",
     )
-    tables = build_index(docs, analyzer="simple", id_col="doc_id")
+    tables = make_index(docs, analyzer="simple", id_col="doc_id")
     scores = spark.createDataFrame(
         [(0, 3.0), (1, 2.0), (2, 1.0)], "doc_id long, score double"
     )
@@ -470,11 +467,10 @@ def test_covering_query_per_doc_msm(spark):
     assert got == {0: (3, 3), 1: (2, 2)}  # doc 2 fails 1 < 2; doc 3 absent
 
 
-def test_common_terms_query_split_and_fallback(spark):
+def test_common_terms_query_split_and_fallback(make_index, spark):
     """CommonTermsQuery: only the rare term gates matching; common
     terms boost score. All-common input falls back to a plain
     disjunction."""
-    from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.search.commonterms import (
         common_terms_query, split_by_frequency,
     )
@@ -489,7 +485,7 @@ def test_common_terms_query_split_and_fallback(spark):
         ],
         "doc_id long, text string",
     )
-    tables = build_index(docs, analyzer="simple", id_col="doc_id")
+    tables = make_index(docs, analyzer="simple", id_col="doc_id")
     rare, common = split_by_frequency(
         tables, ["rareword", "everywhere"], max_term_frequency=0.5
     )

@@ -9,7 +9,6 @@ the brute-force disjunctive score exactly (double pipeline).
 import pytest
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.index.builder import build_index
 from lucene_solr_spark.search.bruteforce import search_bruteforce
 from lucene_solr_spark.search.explain import explain_scores
 
@@ -22,9 +21,9 @@ DOCS = [
 
 
 @pytest.fixture(scope="module")
-def idx(spark):
+def idx(make_index, spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    return build_index(df, analyzer="simple", id_col="doc_id")
+    return make_index(df, analyzer="simple", id_col="doc_id")
 
 
 def test_explain_matches_bruteforce_scores(idx):

@@ -8,7 +8,6 @@ requires every term matched in at least one field.
 import pytest
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.index.builder import build_index
 from lucene_solr_spark.search.flexparser import (
     parse_standard,
     standard_multifield_search,
@@ -16,7 +15,7 @@ from lucene_solr_spark.search.flexparser import (
 
 
 @pytest.fixture(scope="module")
-def two_fields(spark):
+def two_fields(make_index, spark):
     rows = [
         (0, "spark merge engine", "spark tuning"),
         (1, "merge policy deep dive", "merge basics"),
@@ -25,9 +24,9 @@ def two_fields(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id: long, body: string, title: string")
     return {
-        "body": build_index(df.select("doc_id", F.col("body").alias("text")),
+        "body": make_index(df.select("doc_id", F.col("body").alias("text")),
                             analyzer="simple", id_col="doc_id"),
-        "title": build_index(df.select("doc_id", F.col("title").alias("text")),
+        "title": make_index(df.select("doc_id", F.col("title").alias("text")),
                              analyzer="simple", id_col="doc_id"),
     }
 

@@ -10,13 +10,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.functions import smallfloat
-from lucene_solr_spark.index.builder import build_index
 from lucene_solr_spark.search.bruteforce import search_bruteforce
 from lucene_solr_spark.search.fuzzyq import fuzzy_scored
 
 
 @pytest.fixture(scope="module")
-def fz_index(spark):
+def fz_index(make_index, spark):
     docs = spark.createDataFrame(
         [
             ("c0", 0, "join join beta"),
@@ -26,7 +25,7 @@ def fz_index(spark):
         ],
         "conv_id string, turn_idx int, text string",
     )
-    return build_index(docs, analyzer="simple")
+    return make_index(docs, analyzer="simple")
 
 
 def test_exact_only_matches_bruteforce(fz_index):
@@ -82,13 +81,12 @@ def test_zero_boost_dropped_and_absent_empty(fz_index):
     assert fuzzy_scored(fz_index, "xy", max_edits=2).count() == 0
 
 
-def test_edismax_qf_tie(spark):
+def test_edismax_qf_tie(make_index, spark):
     """eDisMax: per-term dismax across fields with qf boosts and tie,
     summed per doc — verified against a hand-computed two-field case."""
     import numpy as np
 
     from lucene_solr_spark.functions import bm25, smallfloat
-    from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.search.edismax import edismax
 
     body = spark.createDataFrame(
@@ -99,8 +97,8 @@ def test_edismax_qf_tie(spark):
         [(0, "alpha"), (1, "gap"), (2, "beta")],
         "doc_id long, text string",
     )
-    tb = build_index(body, analyzer="simple", id_col="doc_id")
-    tt = build_index(title, analyzer="simple", id_col="doc_id")
+    tb = make_index(body, analyzer="simple", id_col="doc_id")
+    tt = make_index(title, analyzer="simple", id_col="doc_id")
     got = {
         r["doc_id"]: r["score"]
         for r in edismax(

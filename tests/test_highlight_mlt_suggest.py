@@ -9,7 +9,6 @@ lucene/suggest/src/test/.../spell/TestDirectSpellChecker.java).
 import pytest
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.index.builder import build_index
 from lucene_solr_spark.search.highlight import highlight
 from lucene_solr_spark.search.mlt import mlt_terms, more_like_this
 from lucene_solr_spark.search.suggest import spellcheck, suggest_prefix
@@ -29,8 +28,8 @@ def corpus(spark):
 
 
 @pytest.fixture(scope="module")
-def idx(corpus):
-    return build_index(corpus, analyzer="simple", id_col="doc_id")
+def idx(make_index, corpus):
+    return make_index(corpus, analyzer="simple", id_col="doc_id")
 
 
 def test_highlight_fragment_and_filter(corpus):
@@ -177,11 +176,10 @@ def test_fuzzy_suggest_tolerates_prefix_typo(sugg):
     assert fuzzy_suggest(sugg, "ku").count() == 0  # exact prefix miss
 
 
-def test_word_breaks_and_combinations(spark):
+def test_word_breaks_and_combinations(make_index, spark):
     """WordBreakSpellChecker analogs: breaks need BOTH halves in the
     dictionary at min length; combinations need the concatenation to
     be a dictionary term."""
-    from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.search.suggest import (
         word_breaks, word_combinations,
     )
@@ -194,7 +192,7 @@ def test_word_breaks_and_combinations(spark):
         ],
         "conv_id string, turn_idx int, text string",
     )
-    idx = build_index(docs, analyzer="simple")
+    idx = make_index(docs, analyzer="simple")
     wb = word_breaks(idx, ["sortmerge", "database", "xyzzy"]).collect()
     got = {(r["input"], r["lft"], r["rgt"]): r["freq_sum"] for r in wb}
     # sortmerge -> sort+merge; database -> data+base (despite 'database'

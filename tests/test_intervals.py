@@ -244,3 +244,39 @@ def test_multiterm_expansion():
     assert w == ("or", [("term", "scan")])
     # no match -> empty disjunction (never matches, like an absent term)
     assert expand_multiterm(prefix("zz"), d) == ("or", [])
+
+
+def test_multiterm_expansion_runs_no_job(spark, make_index):
+    """Prefix and wildcard leaves expand against the dictionary on the
+    driver: building the query launches no Spark job, and the hits equal
+    those of an expansion over the whole collected dictionary."""
+    from lucene_solr_spark.search.intervals import (
+        any_of, expand_multiterm, ordered, prefix, wildcard,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (0, "scan table now"),
+            (1, "slow table"),
+            (2, "spark sql table"),
+            (3, "table scan"),
+            (4, "span the stream"),
+        ],
+        "doc_id long, text string",
+    )
+    idx = make_index(docs, analyzer="simple", id_col="doc_id", index_positions=True)
+    all_terms = sorted(r["term"] for r in idx.dictionary.collect())
+    store = spark.sparkContext._jsc.sc().statusStore()
+    for expr in (
+        ordered(prefix("s"), "table"),
+        any_of(wildcard("s?an"), prefix("str")),
+        ordered(wildcard("*an"), "table"),
+        prefix("zz"),
+    ):
+        before = store.jobsList(None).size()
+        got = interval_query(idx, expr)
+        assert store.jobsList(None).size() == before, expr
+        want = interval_query(idx, expand_multiterm(expr, all_terms))
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        ), expr

@@ -274,8 +274,9 @@ def test_edismax_broadcasts_weights_no_norms_shuffle(spark, tiny_index):
 def test_fuzzy_scored_broadcasts_and_filters_terms(spark, tiny_index):
     """The blended fuzzy query's weight/cache joins broadcast — no
     shuffle join anywhere. (Scan pushdown is asserted by the parquet-
-    backed tests above; the fixture index is cached, so its scans are
-    InMemoryTableScans with the term filter applied above them.)"""
+    backed tests above; the fixture index's postings are decoded from
+    its blocks by a MapInArrow, so the term filter applies above the
+    decode, not in the scan.)"""
     from lucene_solr_spark.search.fuzzyq import fuzzy_scored
 
     df = fuzzy_scored(tiny_index, "vinza", max_edits=1, k=10)
@@ -499,6 +500,43 @@ def test_no_unpartitioned_window_in_any_registered_query(spark):
         if hits:
             offenders[name] = hits
     assert not offenders, offenders
+
+
+def test_window_over_topk_is_not_flagged(spark):
+    """A partition-less Window ranking the k rows of an
+    orderBy().limit(k) is the bounded TopDocs.merge shape."""
+    from pyspark.sql import Window
+
+    from lucene_solr_spark.plans.explain import unpartitioned_windows
+
+    top = (
+        spark.range(100).withColumn("s", F.col("id") % 7)
+        .orderBy(F.desc("s"), "id").limit(5)
+    )
+    ranked = top.select(
+        "id", F.row_number().over(Window.orderBy(F.desc("s"), "id")).alias("r")
+    ).filter(F.col("r") > 1)
+    assert unpartitioned_windows(ranked) == []
+
+
+def test_window_over_limit_below_join_or_aggregate_is_flagged(spark):
+    """A limit under a Join or an Aggregate bounds one input of it, not
+    the rows the Window ranks: both windows are reported."""
+    from pyspark.sql import Window
+
+    from lucene_solr_spark.plans.explain import unpartitioned_windows
+
+    df = spark.range(100).withColumn("s", F.col("id") % 7)
+    top = df.orderBy("id").limit(5).select("id", F.lit(1).alias("hit"))
+    joined = df.join(F.broadcast(top), "id", "left")
+    by_join = joined.select(
+        "id", "hit", F.row_number().over(Window.orderBy("id")).alias("r")
+    )
+    by_agg = joined.groupBy("s").agg(F.count("hit").alias("n")).select(
+        "s", F.rank().over(Window.orderBy(F.desc("n"))).alias("r")
+    )
+    assert len(unpartitioned_windows(by_join)) == 1
+    assert len(unpartitioned_windows(by_agg)) == 1
 
 
 def _executed_plan(df) -> str:

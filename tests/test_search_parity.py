@@ -36,6 +36,32 @@ def test_index_stats_match_oracle(tiny_index, tiny_oracle):
         assert d[t] == (len(pl), int(pl[:, 1].sum())), t
 
 
+def test_view_postings_match_oracle(tiny_index, tiny_oracle):
+    """The postings relation decoded from the index blocks holds exactly
+    the pure-Python oracle's (term, doc_id, freq) postings, and each
+    posting's norm_byte is SmallFloat.intToByte4 of its doc's length.
+    The brute-force and WAND paths read the same blocks, so this is the
+    check against an index built independently of them."""
+    from lucene_solr_spark.functions.smallfloat import int_to_byte4
+
+    assert tiny_index.postings.schema.simpleString() == (
+        "struct<term:string,doc_id:bigint,norm_byte:int,freq:int>"
+    )
+    rows = tiny_index.postings.toPandas()
+    got = set(zip(rows["term"], rows["doc_id"], rows["freq"]))
+    want = {
+        (t, int(d), int(f))
+        for t, pl in tiny_oracle.postings.items()
+        for d, f in pl
+    }
+    assert len(rows) == len(got) == len(want) and got == want
+    dl = np.zeros(len(tiny_oracle.norm_bytes), np.int64)
+    for pl in tiny_oracle.postings.values():
+        np.add.at(dl, pl[:, 0], pl[:, 1])
+    want_norm = int_to_byte4(dl)[rows["doc_id"].to_numpy()]
+    assert (rows["norm_byte"].to_numpy() == want_norm).all()
+
+
 def test_bruteforce_matches_golden(tiny_index, golden):
     for qid, q in golden.items():
         got = search_bruteforce(tiny_index, q["terms"], q["mode"], q["k"]).collect()

@@ -22,7 +22,7 @@ def test_search_matches_engine(spark, searcher):
 
     t = fixtures.make_vocab()[0]
     got = searcher.search(t, k=5).collect()
-    ref = search_bruteforce(searcher.tables, [t], k=5).collect()
+    ref = search_bruteforce(searcher.index, [t], k=5).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in ref]
 
 
@@ -59,24 +59,36 @@ def test_mixed_grammar_via_facade(spark, searcher):
     req = {
         r["doc_id"]: r["score"]
         for r in search_bruteforce(
-            searcher.tables, [a], k=None, precision="double"
+            searcher.index, [a], k=None, precision="double"
         ).collect()
     }
     assert set(got) == set(req)
     assert all(got[d] >= req[d] - 1e-9 for d in got)
 
 
-def test_build_with_positions_wires_phrase_path(spark, tiny_corpus, tmp_path):
+def test_build_with_positions_wires_phrase_path(spark, tiny_corpus, tmp_path, monkeypatch):
     """Searcher.build(with_positions=True) must return a searcher whose
-    phrase queries actually run (round-2 ADVICE: pos_index was dropped)."""
+    phrase queries actually run (round-2 ADVICE: pos_index was dropped),
+    from one segmented index build that serves term scoring and phrase
+    queries both."""
+    from lucene_solr_spark.index import segments
     from lucene_solr_spark.index.builder import transcripts_from_pandas
 
+    calls = []
+    real = segments.build_segmented_index
+
+    def counting(*args, **kwargs):
+        calls.append(kwargs)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(segments, "build_segmented_index", counting)
     df = transcripts_from_pandas(spark, tiny_corpus)
     s = Searcher.build(
         df, analyzer="standard", with_positions=True,
         index_dir=str(tmp_path / "posidx"),
     )
-    assert s.pos_index is not None and s.pos_index.has_positions
+    assert len(calls) == 1
+    assert s.pos_index is s.index and s.index.has_positions
     hits = s.search('"duplicated tie" breaker', k=5).collect()
     assert len(hits) > 0  # the duplicated edge-case convs match
 
@@ -106,11 +118,10 @@ def test_search_mm_spec(spark, tiny_corpus):
         idx.search("+vinza ralandi", mm="2")
 
 
-def test_multireader_parity(spark):
+def test_multireader_parity(make_index, spark):
     """Composite of shard indexes scores identically to one index of
     the union (MultiReader/BaseCompositeReader contract), including a
     term present in only one shard."""
-    from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.search.bruteforce import search_bruteforce
     from lucene_solr_spark.search.multireader import multi_reader
 
@@ -121,11 +132,11 @@ def test_multireader_parity(spark):
         )],
         "doc_id long, text string",
     )
-    single = build_index(docs, analyzer="simple", id_col="doc_id")
-    s1 = build_index(
+    single = make_index(docs, analyzer="simple", id_col="doc_id")
+    s1 = make_index(
         docs.filter("doc_id < 3"), analyzer="simple", id_col="doc_id"
     )
-    s2 = build_index(
+    s2 = make_index(
         docs.filter("doc_id >= 3").withColumn(
             "doc_id", docs.doc_id - 3
         ),
@@ -150,20 +161,19 @@ def test_multireader_parity(spark):
         assert a == b and a
 
 
-def test_multireader_single_and_empty_edge(spark):
+def test_multireader_single_and_empty_edge(make_index, spark):
     """Single-shard composition is the identity; an empty shard list
     rejects; a shard whose docs all tokenize empty contributes nothing
     but keeps docBase accounting consistent."""
     import pytest
 
-    from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.search.bruteforce import search_bruteforce
     from lucene_solr_spark.search.multireader import multi_reader
 
     docs = spark.createDataFrame(
         [(0, "alpha beta"), (1, "beta")], "doc_id long, text string"
     )
-    one = build_index(docs, analyzer="simple", id_col="doc_id")
+    one = make_index(docs, analyzer="simple", id_col="doc_id")
     comp = multi_reader([one])
     a = {(r["doc_id"], r["score"]) for r in search_bruteforce(
         one, ["alpha"], k=None, precision="double").collect()}
@@ -174,9 +184,8 @@ def test_multireader_single_and_empty_edge(spark):
         multi_reader([])
 
 
-def test_edismax_min_should_match(spark):
+def test_edismax_min_should_match(make_index, spark):
     """edismax msm filters on DISTINCT matched terms across fields."""
-    from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.search.edismax import edismax
 
     body = spark.createDataFrame(
@@ -187,8 +196,8 @@ def test_edismax_min_should_match(spark):
         [(0, "gap"), (1, "beta"), (2, "beta")],
         "doc_id long, text string",
     )
-    tb = build_index(body, analyzer="simple", id_col="doc_id")
-    tt = build_index(title, analyzer="simple", id_col="doc_id")
+    tb = make_index(body, analyzer="simple", id_col="doc_id")
+    tt = make_index(title, analyzer="simple", id_col="doc_id")
     fields = {"body": tb, "title": tt}
     # doc0 matches alpha+beta (body), doc1 alpha (body) + beta (title)
     # -> 2 distinct terms; doc2 beta only
@@ -200,22 +209,21 @@ def test_edismax_min_should_match(spark):
     assert any_ == {0, 1, 2}
 
 
-def test_multireader_rejects_sparse_ids(spark):
+def test_multireader_rejects_sparse_ids(make_index, spark):
     """A shard whose declared max_doc (row count) is smaller than
     max(doc_id)+1 would silently collide composite ids — multi_reader
     must raise instead of composing overlapping id ranges."""
     import pytest
 
-    from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.search.multireader import multi_reader
 
-    sparse = build_index(
+    sparse = make_index(
         spark.createDataFrame(
             [(0, "alpha"), (7, "beta")], "doc_id long, text string"
         ),
         analyzer="simple", id_col="doc_id",
     )
-    dense = build_index(
+    dense = make_index(
         spark.createDataFrame(
             [(0, "gap"), (1, "alpha")], "doc_id long, text string"
         ),
@@ -224,7 +232,7 @@ def test_multireader_rejects_sparse_ids(spark):
     with pytest.raises(ValueError, match="not dense"):
         multi_reader([sparse, dense])
     with pytest.raises(ValueError, match="negative"):
-        neg = build_index(
+        neg = make_index(
             spark.createDataFrame(
                 [(-1, "alpha"), (0, "beta")], "doc_id long, text string"
             ),

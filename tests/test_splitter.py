@@ -8,7 +8,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.index.builder import build_index
 from lucene_solr_spark.index.splitter import (
     multi_pass_index_splitter,
     pk_index_splitter,
@@ -18,11 +17,11 @@ SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def parent(spark):
+def parent(make_index, spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         "doc_id", "text"
     )
-    return docs, build_index(docs, analyzer="simple", id_col="doc_id")
+    return docs, make_index(docs, analyzer="simple", id_col="doc_id")
 
 
 def _dict_rows(tables):
@@ -32,11 +31,11 @@ def _dict_rows(tables):
     )
 
 
-def test_pk_split_matches_fresh_build(spark, parent):
+def test_pk_split_matches_fresh_build(make_index, spark, parent):
     docs, tables = parent
     pred = F.col("doc_id") % 3 == 0
     first, rest = pk_index_splitter(tables, pred)
-    fresh_first = build_index(
+    fresh_first = make_index(
         docs.filter(pred), analyzer="simple", id_col="doc_id"
     )
     assert _dict_rows(first) == _dict_rows(fresh_first)
@@ -63,11 +62,11 @@ def test_pk_split_matches_fresh_build(spark, parent):
     )
 
 
-def test_pk_split_search_parity(spark, parent):
+def test_pk_split_search_parity(make_index, spark, parent):
     docs, tables = parent
     pred = F.col("doc_id") % 3 == 0
     first, _ = pk_index_splitter(tables, pred)
-    fresh = build_index(docs.filter(pred), analyzer="simple",
+    fresh = make_index(docs.filter(pred), analyzer="simple",
                         id_col="doc_id")
     from lucene_solr_spark.search.bruteforce import search_bruteforce
 
@@ -99,11 +98,10 @@ def test_multipass_round_robin_and_seq(spark, parent):
     assert sorted(sum(got, [])) == ids_all
 
 
-def test_merge_indexes_equals_fresh_build(spark):
+def test_merge_indexes_equals_fresh_build(make_index, spark):
     """IndexMergeTool analog: merging shard indexes must equal a fresh
     build of the union — identical stats and identical double-precision
     scores, including a term present in only one shard."""
-    from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.index.splitter import merge_indexes
     from lucene_solr_spark.search.bruteforce import search_bruteforce
 
@@ -113,10 +111,10 @@ def test_merge_indexes_equals_fresh_build(spark):
              "alpha beta gap", "gap gap", "beta beta alpha"])],
         "doc_id long, text string",
     )
-    single = build_index(docs, analyzer="simple", id_col="doc_id")
-    s1 = build_index(docs.filter("doc_id < 3"), analyzer="simple",
+    single = make_index(docs, analyzer="simple", id_col="doc_id")
+    s1 = make_index(docs.filter("doc_id < 3"), analyzer="simple",
                      id_col="doc_id")
-    s2 = build_index(
+    s2 = make_index(
         docs.filter("doc_id >= 3").withColumn("doc_id", docs.doc_id - 3),
         analyzer="simple", id_col="doc_id",
     )
@@ -139,16 +137,15 @@ def test_merge_indexes_equals_fresh_build(spark):
         assert a == b and a
 
 
-def test_merge_indexes_rejects_sparse_shard(spark):
+def test_merge_indexes_rejects_sparse_shard(make_index, spark):
     import pytest
 
-    from lucene_solr_spark.index.builder import build_index
     from lucene_solr_spark.index.splitter import merge_indexes
 
     docs = spark.createDataFrame(
         [(5, "alpha beta")], "doc_id long, text string"
     )
-    sparse = build_index(docs, analyzer="simple", id_col="doc_id")
+    sparse = make_index(docs, analyzer="simple", id_col="doc_id")
     with pytest.raises(ValueError, match="not dense"):
         merge_indexes([sparse, sparse])
     with pytest.raises(ValueError):

@@ -6,7 +6,6 @@ trains over a tiny labeled corpus and checks separation.
 
 import pytest
 
-from lucene_solr_spark.index.builder import build_index
 from lucene_solr_spark.operators.textlogit import (
     classify,
     select_features,
@@ -26,9 +25,9 @@ DOCS = [
 
 
 @pytest.fixture(scope="module")
-def idx_labels(spark):
+def idx_labels(make_index, spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string, label int")
-    idx = build_index(df.select("doc_id", "text"), analyzer="simple", id_col="doc_id")
+    idx = make_index(df.select("doc_id", "text"), analyzer="simple", id_col="doc_id")
     return idx, df.select("doc_id", "label")
 
 

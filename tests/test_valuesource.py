@@ -241,11 +241,10 @@ def test_query_boost_value_source(spark):
     assert df.select(field_v("x").alias("v")).collect()[0]["v"] == 7
 
 
-def test_index_stat_values_classic_similarity(spark):
+def test_index_stat_values_classic_similarity(make_index, spark):
     """termfreq/tf/idf/docfreq/numdocs follow ClassicSimilarity on a
     hand-checkable corpus: term 'spark' in 2 of 4 docs, freq 1 and 3."""
     from lucene_solr_spark.functions.valuesource import index_stat_values
-    from lucene_solr_spark.index.builder import build_index
 
     docs = spark.createDataFrame(
         [
@@ -256,7 +255,7 @@ def test_index_stat_values_classic_similarity(spark):
         ],
         "doc_id long, text string",
     )
-    t = build_index(docs, analyzer="simple", id_col="doc_id")
+    t = make_index(docs, analyzer="simple", id_col="doc_id")
     rows = {r["doc_id"]: r for r in index_stat_values(t, "spark").collect()}
     assert set(rows) == {0, 1}
     assert rows[0]["termfreq"] == 1 and rows[1]["termfreq"] == 3
