@@ -66,14 +66,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _gate_index(docs: DataFrame, index_positions: bool = False):
     """Simple-analyzer segmented index over (doc_id, text) rows whose
-    doc_id is trusted as is, built into a fresh temp dir."""
-    import tempfile
-
-    from .index.segments import build_segmented_index
+    doc_id is trusted as is, built into a temp dir that is removed when
+    the process exits."""
+    from .index.segments import build_segmented_index, temp_index_dir
 
     return build_segmented_index(
         docs,
-        tempfile.mkdtemp(prefix="lss_gate_idx_"),
+        temp_index_dir("lss_gate_idx_"),
         num_segments=8,
         seg_group_size=2,
         n_buckets=8,

@@ -38,12 +38,16 @@ published atomically by a snapshot commit, see snapshot.py):
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators.hashing import h60
 from .codec import decode_blocks, encode_blocks_table
@@ -65,6 +69,15 @@ MERGED_POSTING_SCHEMA = T.StructType(
         T.StructField("impact_freqs", T.ArrayType(T.IntegerType())),
         T.StructField("impact_norms", T.ArrayType(T.IntegerType())),
         T.StructField("positions", T.BinaryType()),
+    ]
+)
+
+DICTIONARY_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType()),
+        T.StructField("df", T.LongType()),
+        T.StructField("cf", T.LongType()),
+        T.StructField("term_bucket", T.IntegerType()),
     ]
 )
 
@@ -146,6 +159,18 @@ def merge_segments(
 
     if segments is None:
         segments = committed_segments(index_dir)
+    if not segments:
+        # an empty corpus commits no segment: write schema-only tables,
+        # so Spark and pyarrow readers of the merged dir see its columns
+        for name, schema in (
+            ("postings", MERGED_POSTING_SCHEMA), ("dictionary", DICTIONARY_SCHEMA)
+        ):
+            os.makedirs(f"{index_dir}/{merged_name}/{name}", exist_ok=True)
+            pq.write_table(
+                to_arrow_schema(schema).empty_table(),
+                f"{index_dir}/{merged_name}/{name}/part-00000.parquet",
+            )
+        return merged_name
     paths = [f"{index_dir}/segments/{s}/postings.parquet" for s in segments]
     segs = spark.read.parquet(*paths)
     grouped = segs.withColumn(

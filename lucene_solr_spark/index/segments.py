@@ -27,9 +27,12 @@ the analog of Lucene reading .nvd norms during per-segment scoring.
 
 from __future__ import annotations
 
+import atexit
 import json
 import operator
 import os
+import shutil
+import tempfile
 import time
 from dataclasses import dataclass, field
 from functools import cached_property, reduce
@@ -48,6 +51,7 @@ __all__ = [
     "build_segments",
     "build_segmented_index",
     "read_segmented_index",
+    "temp_index_dir",
     "SegmentedIndex",
     "MANIFEST_SCHEMA",
 ]
@@ -389,6 +393,13 @@ class SegmentedIndex:
         )
 
 
+def temp_index_dir(prefix: str) -> str:
+    """A fresh temp dir for an index, removed when the process exits."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
 def build_segmented_index(
     transcripts: DataFrame,
     index_dir: str,
@@ -542,7 +553,10 @@ def read_segmented_index(spark: SparkSession, index_dir: str) -> SegmentedIndex:
         dictionary=spark.read.parquet(f"{index_dir}/{merged}/dictionary").select(
             "term", "df", "cf"
         ),
-        norms=spark.read.parquet(*norm_paths).select("doc_id", "dl", "norm_byte"),
+        # an explicit schema: an empty index has no norms files to infer from
+        norms=spark.read.schema("doc_id long, dl int, norm_byte int").parquet(
+            *norm_paths
+        ),
         stored=spark.read.parquet(f"{index_dir}/stored"),
         merged_dir=f"{index_dir}/{merged}",
         doc_count=stats["doc_count"],

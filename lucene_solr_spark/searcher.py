@@ -54,25 +54,22 @@ class Searcher:
         analyzer: str = "standard",
         with_positions: bool = False,
         index_dir: str | None = None,
-        **kwargs,
     ) -> "Searcher":
         """Index a transcript-shaped DataFrame and open a searcher on it
         (IndexWriter.addDocuments + DirectoryReader.open in one step).
 
-        One segmented index is built under ``index_dir`` (a temp dir if
-        not given); ``kwargs`` go to build_segmented_index.
+        One segmented index is built under ``index_dir`` (if not given,
+        a temp dir that is removed when the process exits).
         with_positions=True stores positions in it
         (DOCS_AND_FREQS_AND_POSITIONS), so phrase queries work straight
         off the build path."""
-        from .index.segments import build_segmented_index
+        from .index.segments import build_segmented_index, temp_index_dir
 
-        if index_dir is None:
-            import tempfile
-
-            index_dir = tempfile.mkdtemp(prefix="lss_searcher_")
         index = build_segmented_index(
-            transcripts, index_dir, analyzer=analyzer,
-            index_positions=with_positions, **kwargs,
+            transcripts,
+            index_dir or temp_index_dir("lss_searcher_"),
+            analyzer=analyzer,
+            index_positions=with_positions,
         )
         return cls(index, pos_index=index if with_positions else None)
 

@@ -75,8 +75,9 @@ def test_bruteforce_matches_golden(tiny_index, golden):
 
 
 def test_per_turn_text_equality(tiny_index, tiny_corpus):
-    """Per-row invariant (BASELINE.json input_hint): docmap ⨝ stored read
-    back under (conv_id, turn_idx) order reproduces the input text."""
+    """Per-row invariant (BASELINE.json input_hint): the stored fields
+    read back under (conv_id, turn_idx) order reproduce the input text,
+    with doc ids dense in that order."""
     back = (
         tiny_index.stored.select("conv_id", "turn_idx", "text", "doc_id")
         .orderBy("conv_id", "turn_idx")

@@ -93,6 +93,22 @@ def test_build_with_positions_wires_phrase_path(spark, tiny_corpus, tmp_path, mo
     assert len(hits) > 0  # the duplicated edge-case convs match
 
 
+def test_build_empty_corpus(spark, tiny_corpus, tmp_path):
+    """A corpus with no rows builds an empty index that every query path
+    answers with no hits."""
+    from lucene_solr_spark.index.builder import transcripts_from_pandas
+    from lucene_solr_spark.search.wand import search_wand
+
+    df = transcripts_from_pandas(spark, tiny_corpus).limit(0)
+    searcher = Searcher.build(df, with_positions=True, index_dir=str(tmp_path))
+    index = searcher.index
+    assert (index.doc_count, index.max_doc) == (0, 0)
+    assert searcher.search("x", k=5).count() == 0
+    assert searcher.search('"x y"', k=5).count() == 0
+    assert search_wand(index, ["x"], k=5).count() == 0
+    assert index.postings.count() == 0 and index.norms.count() == 0
+
+
 def test_search_mm_spec(spark, tiny_corpus):
     """Searcher.search(mm=...): the Solr mm spec constrains optional
     clauses on the all-SHOULD query shape; other shapes reject."""
