@@ -85,3 +85,30 @@ def test_search_after_pruned_equals_complete(scale_index, wand_legs):
             scale_index, conj, "conjunctive", 10, after=a2, complete=True
         ))
         assert cp == cf, leg
+
+
+def test_pruning_decodes_fewer_blocks(scale_index, monkeypatch):
+    """The pruned run of a one-term disjunction decodes fewer blocks than
+    its COMPLETE run, and no run decodes a block twice. Blocks are
+    counted as they pass through codec.decode_blocks, in-process (Spark
+    leaves decode in worker processes)."""
+    from lucene_solr_spark.index import codec
+
+    decode, seen = codec.decode_blocks, []
+
+    def counting(counts, docs, *rest):
+        seen.extend(docs)
+        return decode(counts, docs, *rest)
+
+    monkeypatch.setattr(codec, "decode_blocks", counting)
+    decoded = {}
+    for complete in (False, True):
+        seen.clear()
+        search_wand(
+            scale_index, [synth_term(1)], "disjunctive", 10, complete=complete
+        ).collect()
+        # one term's blocks hold disjoint docs, and a block's doc payload
+        # starts with its absolute first doc, so no two payloads are equal
+        assert len(set(seen)) == len(seen), complete
+        decoded[complete] = len(seen)
+    assert 0 < decoded[False] < decoded[True], decoded

@@ -209,33 +209,43 @@ def test_resume_after_boundaries_move(spark, tmp_path):
 
 def _checked_postings(index) -> dict:
     """(term, doc) → (freq, norm, positions) over every merged block,
-    asserting each term's postings are sorted, in disjoint blocks bounded
-    by first_doc/last_doc."""
+    asserting each term's postings in a seg_group are sorted, in disjoint
+    blocks bounded by first_doc/last_doc (two seg_groups' doc ranges may
+    interleave after a resume)."""
     out, prev = {}, {}
-    for r in sorted(index.blocks.collect(), key=lambda r: (r["term"], r["first_doc"])):
-        t = r["term"]
+    rows = index.blocks.collect()
+    for r in sorted(rows, key=lambda r: (r["term"], r["seg_group"], r["first_doc"])):
+        t, run = r["term"], (r["term"], r["seg_group"])
         d, f = decode_block(bytes(r["docs"]), bytes(r["freqs"]))
         assert (np.diff(d) > 0).all(), t
         assert (d[0], d[-1]) == (r["first_doc"], r["last_doc"]), t
-        assert prev.get(t, -1) < d[0], t
-        prev[t] = d[-1]
+        assert prev.get(run, -1) < d[0], t
+        prev[run] = d[-1]
         n = np.frombuffer(bytes(r["norms"]), dtype=np.uint8)
         pos, off = decode_positions(bytes(r["positions"]), f)
         for i, doc in enumerate(d):
+            assert (t, int(doc)) not in out, (t, doc)
             out[t, int(doc)] = (int(f[i]), int(n[i]), pos[off[i]:off[i + 1]].tolist())
     return out
 
 
-def test_resume_around_committed_segment(spark, tiny_corpus, tmp_path):
+@pytest.mark.parametrize("seg_group_size", [None, 1], ids=["default", "1"])
+def test_resume_around_committed_segment(
+    spark, tiny_corpus, tmp_path, wand_legs, seg_group_size
+):
     """A resumed segment can hold docs on both sides of a committed one.
     Here seg-00000 and seg-00002 lose their commit and are rebuilt as one
-    segment around committed seg-00001, and the default seg_group_size
-    merges all of them in one seg_group: the merged postings must equal
-    the full build's, sorted per term, and the pruned top-k must equal
-    the golden answers."""
+    segment around committed seg-00001. The default seg_group_size merges
+    all of them in one seg_group; with 1, the rebuilt segment's seg_group
+    surrounds the committed one's doc range. The merged postings must
+    equal the full build's, sorted per term in each seg_group, and the
+    pruned top-k must equal the golden answers on both executions of
+    search_wand."""
     df = transcripts_from_pandas(spark, tiny_corpus)
     index_dir = str(tmp_path)
     kw = dict(n_buckets=8, index_positions=True)
+    if seg_group_size:
+        kw["seg_group_size"] = seg_group_size
     want = _checked_postings(build_segmented_index(df, index_dir, num_segments=4, **kw))
     for seg in ("seg-00000", "seg-00002"):
         os.remove(f"{index_dir}/segments/{seg}/manifest.json")
@@ -247,7 +257,8 @@ def test_resume_around_committed_segment(spark, tiny_corpus, tmp_path):
         kept = json.load(f)
     assert rebuilt["min_doc"] < kept["min_doc"] < kept["max_doc"] < rebuilt["max_doc"]
     assert _checked_postings(idx) == want
-    _assert_golden(idx)
+    for _ in wand_legs():
+        _assert_golden(idx)
 
 
 def test_resume_refuses_segment_of_other_codec(spark, tiny_corpus, tmp_path):
