@@ -34,8 +34,6 @@ __all__ = [
     "decode_blocks",
     "encode_posting_blocks",
     "encode_blocks_table",
-    "decode_block",
-    "decode_positions",
     "impacts_frontier",
 ]
 
@@ -73,6 +71,8 @@ def decode_vints(buf: bytes) -> np.ndarray:
     b = np.frombuffer(buf, dtype=np.uint8)
     if len(b) == 0:
         return np.empty(0, dtype=np.uint64)
+    if b[-1] & 0x80:
+        raise ValueError("varint payload ends inside a value")
     is_end = (b & 0x80) == 0
     ends = np.nonzero(is_end)[0]
     starts = np.concatenate(([0], ends[:-1] + 1))
@@ -271,9 +271,15 @@ def decode_blocks(counts, docs: List[bytes], freqs: List[bytes],
     (doc_ids, freqs, norm_bytes, positions), int64 arrays. ``counts`` is
     each block's n_docs; the other arguments are the blocks' payload
     columns. Doc gaps restart at each block's absolute first doc (a
-    segmented cumsum). ``positions`` come back as absolute in-doc
-    offsets in posting order, or None when no block stores any. The
-    merge and the postings view (segments.py) both decode here."""
+    segmented cumsum). A block's positions payload is the varints of its
+    postings' in-doc token positions, in posting order, delta-encoded
+    inside each posting (first position absolute) — the .prx/.pos analog
+    (reference: codecs/lucene50/Lucene50PostingsFormat.java:48-58), so
+    freqs delimit postings. ``positions`` come back as absolute in-doc
+    offsets in posting order, or None when no block stores any; a
+    payload whose position count differs from Σ freqs raises ValueError.
+    The merge, the postings view (segments.py), WAND and the positional
+    queries all decode here."""
     counts = np.asarray(counts, dtype=np.int64)
     gaps = decode_payloads(docs).astype(np.int64)
     fq = decode_payloads(freqs).astype(np.int64)
@@ -285,45 +291,17 @@ def decode_blocks(counts, docs: List[bytes], freqs: List[bytes],
     if not pos_concat:
         return doc_ids, fq, nb, None
     pos_gaps = decode_vints(pos_concat).astype(np.int64)
+    if len(pos_gaps) != fq.sum():
+        raise ValueError(
+            f"positions payload has {len(pos_gaps)} entries, freqs imply {fq.sum()}"
+        )
     pstarts = np.cumsum(fq) - fq
     pcs = np.cumsum(pos_gaps)
     return doc_ids, fq, nb, pcs - np.repeat(pcs[pstarts] - pos_gaps[pstarts], fq)
 
 
-def decode_block(docs_bytes: bytes, freqs_bytes: bytes) -> Tuple[np.ndarray, np.ndarray]:
-    """block bytes → (doc_ids ascending int64, freqs int64)."""
-    gaps = decode_payload(docs_bytes).astype(np.int64)
-    return np.cumsum(gaps), decode_payload(freqs_bytes).astype(np.int64)
-
-
 def _varint_lengths(vals: np.ndarray) -> np.ndarray:
     return np.maximum(1, (_bit_length(np.asarray(vals, dtype=np.uint64)) + 6) // 7)
-
-
-def decode_positions(pos_bytes: bytes, freqs: np.ndarray):
-    """One block's positions payload → (flat absolute positions int64,
-    offsets int64[len(freqs)+1]).
-
-    The payload is the concatenation, in posting order, of each
-    posting's within-document token positions, delta-encoded inside the
-    posting (first position absolute) — the .prx/.pos analog
-    (reference: codecs/lucene50/Lucene50PostingsFormat.java:48-58).
-    ``freqs`` (termFreq == number of positions) delimits postings.
-    """
-    freqs = np.asarray(freqs, dtype=np.int64)
-    offsets = np.zeros(len(freqs) + 1, dtype=np.int64)
-    np.cumsum(freqs, out=offsets[1:])
-    gaps = decode_vints(pos_bytes).astype(np.int64)
-    if len(gaps) != offsets[-1]:
-        raise ValueError(
-            f"positions payload has {len(gaps)} entries, freqs imply {offsets[-1]}"
-        )
-    if len(gaps) == 0:
-        return gaps, offsets
-    cs = np.cumsum(gaps)
-    starts = offsets[:-1]
-    base = np.repeat(cs[starts] - gaps[starts], freqs)
-    return cs - base, offsets
 
 
 def encode_posting_blocks_batch(
@@ -346,7 +324,7 @@ def encode_posting_blocks_batch(
     positions: optional flat within-doc token positions in occurrence
     order (posting order, ascending inside each posting; length ==
     freqs.sum()) — the DOCS_AND_FREQS_AND_POSITIONS analog. Encoded as
-    per-posting delta varints, sliced per block (see decode_positions).
+    per-posting delta varints, sliced per block (see decode_blocks).
 
     Returns (block_term_code, first_doc, last_doc, n_docs, sum_freq,
     docs_bytes_list, freqs_bytes_list, norms_bytes_list,

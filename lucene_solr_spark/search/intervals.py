@@ -538,10 +538,8 @@ def interval_query(
         occ = {}
         docsets = {}
         for t in names:
-            pt = pts[t]
-            cd = np.unique(pt.all_docs())
-            occ[t] = pt.occurrences(cd)
-            docsets[t] = cd
+            occ[t] = pts[t].occurrences()
+            docsets[t] = pts[t].all_docs()
         if required:
             cand = docsets[required[0]]
             for t in required[1:]:

@@ -1,15 +1,22 @@
-"""Index-backed phrase matching over positional posting blocks.
+"""Index-backed phrase and span matching over positional posting blocks.
 
-The PhraseQuery analog (reference: search/PhraseQuery.java,
-ExactPhraseMatcher.java, SloppyPhraseMatcher.java), re-expressed for the
-segmented index: each ``seg_group`` leaf is matched independently by an
-``applyInPandas`` worker over the positional blocks of the query terms
-only (term_bucket partition pruning, same as WAND), and the per-leaf
-results are unioned — no query-time re-tokenization of the corpus, so
-phrase cost scales with the query terms' posting lists, not corpus size.
+The PhraseQuery and SpanQuery analogs (reference: search/PhraseQuery.java,
+ExactPhraseMatcher.java, SloppyPhraseMatcher.java, search/spans/),
+re-expressed for the segmented index. Every query here runs through one
+runner, ``_run_span``: a driver-side df lookup, the pinned scoring env
+(``_span_env``), and one ``applyInPandas`` leaf per ``seg_group`` over
+the query terms' positional blocks only (term_bucket partition pruning,
+same as WAND, projected to ``LEAF_COLUMNS``). A query is its
+``leaf_hits`` function: {term: ``_PosTerm``} → (doc ids, freqs).
+``_PosTerm`` decodes a term's blocks lazily, each at most once, in
+batches through ``codec.decode_blocks`` — the block decoder the merge,
+the postings view and WAND use. No query-time re-tokenization of the
+corpus, so cost scales with the query terms' posting lists, not corpus
+size.
 
-Pinned matching contract (this engine's SloppyPhraseMatcher analog,
-simplified to ordered-slop semantics — see gate fts_phrase_sloppy):
+Pinned phrase matching contract (this engine's SloppyPhraseMatcher
+analog, simplified to ordered-slop semantics — see gate
+fts_phrase_sloppy):
 
 - a match is an ordered chain of occurrences p_1 < p_2 < … < p_n, one
   per query term in query order, with every successive gap
@@ -18,9 +25,9 @@ simplified to ordered-slop semantics — see gate fts_phrase_sloppy):
 - ``phrase_freq`` = number of distinct chain END positions per doc (for
   exact phrases this equals the classical phrase frequency).
 
-Scoring follows Lucene's phrase weighting: one BM25 score with
-``freq = phrase_freq`` and ``idf = Σ idf(term)`` over the query terms
-(BM25Similarity.java:183-192 idf summation in
+Scoring follows Lucene's phrase and span weighting: one BM25 score with
+``freq`` = the phrase (span) freq and ``idf = Σ idf(term)`` over the
+query's terms (BM25Similarity.java:183-192 idf summation in
 Similarity.computeWeight for multi-term stats), float32 cast points
 identical to term scoring (functions/bm25.py).
 """
@@ -31,102 +38,108 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import bm25
+from ..index import codec
 from .scoring import term_weights
 
-__all__ = ["search_phrase"]  # + span-near via ordered=False
+__all__ = ["search_phrase", "LEAF_COLUMNS"]  # + span-near via ordered=False
+
+# the block columns a positional leaf reads
+LEAF_COLUMNS = (
+    "seg_group", "term", "first_doc", "last_doc", "n_docs", "docs", "freqs",
+    "norms", "positions",
+)
 
 _POS_SHIFT = np.int64(1) << np.int64(32)
 
 
+def _isin_sorted(sorted_vals: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Mask over ``x``: which values occur in ``sorted_vals``."""
+    idx = np.searchsorted(sorted_vals, x)
+    ok = idx < len(sorted_vals)
+    hit = np.zeros(len(x), dtype=bool)
+    hit[ok] = sorted_vals[idx[ok]] == x[ok]
+    return hit
+
+
 class _PosTerm:
-    """One term's blocks in one leaf, with lazy doc+position decode."""
+    """One term's blocks in one leaf. Blocks decode lazily, each at most
+    once, in one ``codec.decode_blocks`` batch per call that needs new
+    ones."""
 
     def __init__(self, g: pd.DataFrame):
-        from ..index.codec import decode_block, decode_positions
-
-        self._decode_block = decode_block
-        self._decode_positions = decode_positions
         g = g.sort_values("first_doc").reset_index(drop=True)
         self.first = g["first_doc"].to_numpy()
         self.last = g["last_doc"].to_numpy()
-        self.n_docs = g["n_docs"].to_numpy()
-        self._docs_bytes = g["docs"].tolist()
-        self._freqs_bytes = g["freqs"].tolist()
-        self._pos_bytes = g["positions"].tolist()
-        self._norms_bytes = g["norms"].tolist()
+        self.n_docs = g["n_docs"].to_numpy().astype(np.int64)
+        self._payloads = [g[c].tolist() for c in ("docs", "freqs", "norms", "positions")]
         self.total_docs = int(self.n_docs.sum())
-        self._cache: dict = {}
+        self._decoded = np.zeros(len(self.first), dtype=bool)
+        self._cache: dict = {}  # block → (docs, freqs, norms, positions)
 
-    def blocks_overlapping(self, docs_sorted: np.ndarray) -> list:
-        lo = np.searchsorted(docs_sorted, self.first, "left")
-        hi = np.searchsorted(docs_sorted, self.last, "right")
-        return list(np.nonzero(hi > lo)[0])
+    def _postings(self, want: np.ndarray):
+        """(docs, freqs, norm bytes, positions) of the blocks of mask
+        ``want``, concatenated in doc order."""
+        rows = np.flatnonzero(want & ~self._decoded)
+        if len(rows):
+            self._decoded[rows] = True
+            counts = self.n_docs[rows]
+            d, f, n, p = codec.decode_blocks(
+                counts, *([col[i] for i in rows] for col in self._payloads)
+            )
+            cut = np.cumsum(counts)[:-1]
+            pcut = np.cumsum(f)[cut - 1]
+            for bi, *parts in zip(
+                rows, np.split(d, cut), np.split(f, cut), np.split(n, cut),
+                np.split(p, pcut),
+            ):
+                self._cache[bi] = parts
+        sel = np.flatnonzero(want)
+        if not len(sel):
+            return (np.empty(0, np.int64),) * 4
+        return tuple(map(np.concatenate, zip(*(self._cache[i] for i in sel))))
 
-    def _block(self, bi: int):
-        got = self._cache.get(bi)
-        if got is None:
-            d, f = self._decode_block(self._docs_bytes[bi], self._freqs_bytes[bi])
-            flat, offs = self._decode_positions(self._pos_bytes[bi], f)
-            n = np.frombuffer(self._norms_bytes[bi], dtype=np.uint8).astype(np.int64)
-            got = self._cache[bi] = (d, f, flat, offs, n)
-        return got
-
-    def all_docs(self) -> np.ndarray:
-        if not len(self.first):
-            return np.empty(0, dtype=np.int64)
-        return np.concatenate(
-            [self._block(i)[0] for i in range(len(self.first))]
+    def _overlapping(self, cand: np.ndarray) -> np.ndarray:
+        """Mask of the blocks whose doc range holds a doc of sorted cand."""
+        return np.searchsorted(cand, self.last, "right") > np.searchsorted(
+            cand, self.first, "left"
         )
 
-    def occurrences(self, cand: np.ndarray):
-        """(doc, pos) occurrence pairs restricted to sorted candidate
-        docs → (docs int64, positions int64), doc-then-pos ascending."""
-        d_parts, p_parts = [], []
-        for bi in self.blocks_overlapping(cand):
-            d, f, flat, offs, _ = self._block(bi)
-            idx = np.searchsorted(cand, d)
-            ok = idx < len(cand)
-            hit = np.zeros(len(d), dtype=bool)
-            hit[ok] = cand[idx[ok]] == d[ok]
-            if not hit.any():
-                continue
-            keep_tok = np.repeat(hit, f)
-            d_parts.append(np.repeat(d, f)[keep_tok])
-            p_parts.append(flat[keep_tok])
-        if not d_parts:
-            return np.empty(0, np.int64), np.empty(0, np.int64)
-        return np.concatenate(d_parts), np.concatenate(p_parts)
+    def all_docs(self) -> np.ndarray:
+        return self._postings(np.ones(len(self.first), dtype=bool))[0]
+
+    def occurrences(self, cand: np.ndarray | None = None):
+        """(doc, pos) occurrence pairs, restricted to sorted candidate
+        docs when given → (docs int64, positions int64), doc-then-pos
+        ascending."""
+        if cand is None:
+            d, f, _, p = self._postings(np.ones(len(self.first), dtype=bool))
+            return np.repeat(d, f), p
+        d, f, _, p = self._postings(self._overlapping(cand))
+        keep = np.repeat(_isin_sorted(cand, d), f)
+        return np.repeat(d, f)[keep], p[keep]
 
     def norms_for(self, cand: np.ndarray) -> np.ndarray:
         """norm byte per candidate doc (docs absent from this term → 0)."""
+        d, _, n, _ = self._postings(self._overlapping(cand))
         out = np.zeros(len(cand), dtype=np.int64)
-        for bi in self.blocks_overlapping(cand):
-            d, f, flat, offs, n = self._block(bi)
-            idx = np.searchsorted(cand, d)
-            ok = idx < len(cand)
-            hit = np.zeros(len(d), dtype=bool)
-            hit[ok] = cand[idx[ok]] == d[ok]
-            out[idx[hit]] = n[hit]
+        hit = _isin_sorted(cand, d)
+        out[np.searchsorted(cand, d[hit])] = n[hit]
         return out
 
 
 def _slot_docs(slot: list) -> np.ndarray:
     """Union of the alternatives' doc sets (MultiPhraseQuery slot)."""
-    parts = [pt.all_docs() for pt in slot]
-    return np.unique(np.concatenate(parts)) if parts else np.empty(0, np.int64)
+    return np.unique(np.concatenate([pt.all_docs() for pt in slot]))
 
 
 def _slot_occurrences(slot: list, cand: np.ndarray):
-    d_parts, p_parts = [], []
-    for pt in slot:
-        d, p = pt.occurrences(cand)
-        d_parts.append(d)
-        p_parts.append(p)
-    return np.concatenate(d_parts), np.concatenate(p_parts)
+    occ = [pt.occurrences(cand) for pt in slot]
+    return np.concatenate([d for d, _ in occ]), np.concatenate([p for _, p in occ])
 
 
 def _intersect_docs(slots: list) -> np.ndarray:
@@ -141,110 +154,6 @@ def _intersect_docs(slots: list) -> np.ndarray:
         d, _ = _slot_occurrences(slots[i], cand)
         cand = np.intersect1d(cand, d, assume_unique=False)
     return cand
-
-
-def _leaf_phrase(
-    pdf: pd.DataFrame, slot_terms: list, slop: int, ordered: bool = True
-) -> pd.DataFrame:
-    """One leaf → (doc_id, phrase_freq, norm_byte) for matching docs.
-
-    slot_terms: list of tuples of alternative terms per phrase position
-    (a single-alternative tuple per slot == plain PhraseQuery; several ==
-    MultiPhraseQuery, reference search/MultiPhraseQuery.java).
-    """
-    empty = pd.DataFrame(
-        {
-            "doc_id": pd.Series(dtype="int64"),
-            "phrase_freq": pd.Series(dtype="int64"),
-            "norm_byte": pd.Series(dtype="int32"),
-        }
-    )
-    groups = {t: g for t, g in pdf.groupby("term")}
-    slots = []
-    for alts in slot_terms:
-        slot = [_PosTerm(groups[t]) for t in alts if t in groups]
-        if not slot:  # no alternative present ⇒ phrase cannot match
-            return empty
-        slots.append(slot)
-    cand = _intersect_docs(slots)
-    if len(cand) == 0:
-        return empty
-
-    # rank-encode docs so (doc, pos) packs into one int64 key
-    def key_of(docs, pos):
-        ranks = np.searchsorted(cand, docs)
-        return ranks.astype(np.int64) * _POS_SHIFT + pos
-
-    d0, p0 = _slot_occurrences(slots[0], cand)
-    if not ordered:
-        # SpanNearQuery inOrder=false (2 slots): match when DISTINCT
-        # positions pa, pb satisfy |pa - pb| <= slop+1; freq = distinct
-        # pb with a qualifying pa. Same packed-key probe as the ordered
-        # chain, deltas in both directions (underflow lands on a
-        # nonexistent huge position of the previous doc — never a hit).
-        keys_a = np.sort(key_of(d0, p0))
-        db, pb = _slot_occurrences(slots[1], cand)
-        base = np.unique(key_of(db, pb))
-        hit = np.zeros(len(base), dtype=bool)
-        for delta in range(-(slop + 1), slop + 2):
-            if delta == 0:
-                continue
-            probe = base + np.int64(delta)
-            idx = np.searchsorted(keys_a, probe)
-            ok = idx < len(keys_a)
-            h = np.zeros(len(probe), dtype=bool)
-            h[ok] = keys_a[idx[ok]] == probe[ok]
-            hit |= h
-        active = base[hit]
-        if len(active) == 0:
-            return empty
-        ranks = (active // _POS_SHIFT).astype(np.int64)
-        m_docs, freq = np.unique(ranks, return_counts=True)
-        out_docs = cand[m_docs]
-        norms = slots[0][0].norms_for(cand)
-        for pt in slots[0][1:]:
-            extra = pt.norms_for(cand)
-            norms = np.where(norms > 0, norms, extra)
-        norms = norms[m_docs]
-        return pd.DataFrame(
-            {
-                "doc_id": out_docs,
-                "phrase_freq": freq.astype(np.int64),
-                "norm_byte": norms.astype(np.int32),
-            }
-        )
-    active = np.unique(key_of(d0, p0))  # chain frontier: (doc, last pos)
-    for slot in slots[1:]:
-        if len(active) == 0:
-            break
-        d, p = _slot_occurrences(slot, cand)
-        keys = np.sort(key_of(d, p))
-        nxt = []
-        for delta in range(1, slop + 2):
-            probe = active + np.int64(delta)
-            idx = np.searchsorted(keys, probe)
-            ok = idx < len(keys)
-            hit = np.zeros(len(probe), dtype=bool)
-            hit[ok] = keys[idx[ok]] == probe[ok]
-            nxt.append(probe[hit])
-        active = np.unique(np.concatenate(nxt)) if nxt else active[:0]
-    if len(active) == 0:
-        return empty
-    ranks = (active // _POS_SHIFT).astype(np.int64)
-    m_docs, freq = np.unique(ranks, return_counts=True)
-    out_docs = cand[m_docs]
-    norms = slots[0][0].norms_for(cand)
-    for pt in slots[0][1:]:  # a doc may only appear under one alternative
-        extra = pt.norms_for(cand)
-        norms = np.where(norms > 0, norms, extra)
-    norms = norms[m_docs]
-    return pd.DataFrame(
-        {
-            "doc_id": out_docs,
-            "phrase_freq": freq.astype(np.int64),
-            "norm_byte": norms.astype(np.int32),
-        }
-    )
 
 
 def search_phrase(
@@ -262,7 +171,9 @@ def search_phrase(
 
     terms: one entry per phrase position — a plain string, or a
     list/tuple of alternative terms for that position (MultiPhraseQuery,
-    reference search/MultiPhraseQuery.java).
+    reference search/MultiPhraseQuery.java). A position none of whose
+    alternatives is in the index matches nothing; absent alternatives
+    are dropped. idf sums every present alternative of every position.
 
     Returns DataFrame(doc_id long, phrase_freq long, score float) ordered
     by (score desc, doc_id asc); ``k=None`` returns every matching doc
@@ -271,16 +182,6 @@ def search_phrase(
     precision: "float32" (Lucene-exact cast points) or "double" (full
     double math, ANSI-SQL-reproducible — see scoring.score_components).
     """
-    if not getattr(index, "has_positions", False):
-        raise ValueError(
-            "index was built without positions "
-            "(build_segmented_index(..., index_positions=True))"
-        )
-    score_type = "double" if precision == "double" else "float"
-    spark = index.blocks.sparkSession
-    empty = spark.createDataFrame(
-        [], f"doc_id long, phrase_freq long, score {score_type}"
-    )
     slot_terms = [
         tuple(t) if isinstance(t, (list, tuple)) else (t,) for t in terms
     ]
@@ -291,58 +192,40 @@ def search_phrase(
             "unordered span-near (SpanNearQuery inOrder=false) supports "
             "exactly 2 positions"
         )
-    from ..operators.hashing import h60_py  # local: avoid cycle
+    flat = [t for alts in slot_terms for t in alts]
 
-    df_by_term = index.lookup_df(t for alts in slot_terms for t in alts)
-    # a slot with NO present alternative ⇒ no hits (phrase is conjunctive
-    # across slots); absent alternatives within a slot are just dropped
-    slot_terms = [
-        tuple(t for t in alts if t in df_by_term) for alts in slot_terms
-    ]
-    if any(not alts for alts in slot_terms):
-        return empty
-    present = list(dict.fromkeys(t for alts in slot_terms for t in alts))
-    weights = dict(
-        term_weights(
-            df_by_term, index.doc_count, present, boost, k1, b, precision
-        )
-    )
-    # Σ idf over query terms (each slot contributes every alternative's
-    # idf, as Lucene sums per-clause termStats for MultiPhraseQuery)
-    raw_w_sum = sum(float(weights[t]) for alts in slot_terms for t in alts)
-    if precision == "double":
-        from .scoring import double_norm_cache
+    def leaf_hits(pts):
+        slots = [[pts[t] for t in alts if t in pts] for alts in slot_terms]
+        cand = _intersect_docs(slots)
 
-        w_sum = np.float64(raw_w_sum)
-        cache = double_norm_cache(
-            index.sum_total_term_freq, index.doc_count, k1, b
-        )
-    else:
-        w_sum = np.float32(raw_w_sum)
-        avgdl = bm25.avgdl(index.sum_total_term_freq, max(index.doc_count, 1))
-        cache = bm25.norm_cache(avgdl, np.float32(k1), np.float32(b))
+        # rank-encode docs so (doc, pos) packs into one int64 key
+        def keys_of(slot):
+            docs, pos = _slot_occurrences(slot, cand)
+            return np.searchsorted(cand, docs).astype(np.int64) * _POS_SHIFT + pos
 
-    buckets = sorted({h60_py(t) % index.n_buckets for t in present})
-    blocks = index.blocks.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(present)
-    )
-
-    def leaf(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _leaf_phrase(pdf, slot_terms, slop, ordered)
-        pf = out["phrase_freq"].to_numpy(np.int64)
-        nb = out["norm_byte"].to_numpy(np.int64)
-        if precision == "double":
-            norm = cache[nb & 0xFF]
-            out["score"] = float(w_sum) * (pf / (pf + norm))
+        if ordered:
+            active = np.unique(keys_of(slots[0]))  # chain frontier: (doc, last pos)
+            for slot in slots[1:]:
+                keys = np.sort(keys_of(slot))
+                probe = (active + np.arange(1, slop + 2)[:, None]).ravel()
+                active = np.unique(probe[_isin_sorted(keys, probe)])
         else:
-            out["score"] = bm25.score_term(pf, nb, w_sum, cache)
-        return out[["doc_id", "phrase_freq", "score"]]
+            # SpanNearQuery inOrder=false (2 slots): match when DISTINCT
+            # positions pa, pb satisfy |pa - pb| <= slop+1; freq = distinct
+            # pb with a qualifying pa (underflow lands on a nonexistent
+            # huge position of the previous doc — never a hit).
+            keys_a = np.sort(keys_of(slots[0]))
+            base = np.unique(keys_of(slots[1]))
+            deltas = np.r_[-(slop + 1):0, 1:slop + 2][:, None]
+            found = _isin_sorted(keys_a, (base + deltas).ravel())
+            active = base[found.reshape(len(deltas), -1).any(axis=0)]
+        m_docs, freq = np.unique(active // _POS_SHIFT, return_counts=True)
+        return cand[m_docs], freq
 
-    local = blocks.groupBy("seg_group").applyInPandas(
-        leaf, schema=f"doc_id long, phrase_freq long, score {score_type}"
+    return _run_span(
+        index, flat, slot_terms, leaf_hits, k, boost, k1, b, precision,
+        idf_terms=flat, freq_col="phrase_freq",
     )
-    out = local.orderBy(F.desc("score"), F.asc("doc_id"))
-    return out.limit(k) if k is not None else out
 
 
 def span_first(
@@ -368,74 +251,15 @@ def span_first(
     Pinned scoring contract: BM25 with ``freq`` = number of qualifying
     occurrences (span_freq), the same shape phrase scoring uses — the
     reference's SpanScorer sloppyFreq reduces to this for zero-length
-    single-term spans.
+    single-term spans."""
 
-    Same plan shape as phrases: the ONE term's positional blocks,
-    term_bucket-pruned, matched per seg_group leaf; cost scales with
-    that term's posting list, never the corpus."""
-    from ..operators.hashing import h60_py
+    def leaf_hits(pts):
+        docs, pos = pts[term].occurrences()
+        return np.unique(docs[(pos < end) & (pos >= start)], return_counts=True)
 
-    score_type = "double" if precision == "double" else "float"
-    spark = index.blocks.sparkSession
-    empty = spark.createDataFrame(
-        [], f"doc_id long, span_freq long, score {score_type}"
+    return _run_span(
+        index, [term], [term], leaf_hits, k, boost, k1, b, precision
     )
-    if not getattr(index, "has_positions", False):
-        raise ValueError("span_first needs a positional index")
-    df_by_term = index.lookup_df([term])
-    if not df_by_term:
-        return empty
-    weights = dict(
-        term_weights(
-            df_by_term, index.doc_count, [term], boost, k1, b, precision,
-        )
-    )
-    w = float(weights[term])
-    if precision == "double":
-        from .scoring import double_norm_cache
-
-        cache = double_norm_cache(
-            index.sum_total_term_freq, index.doc_count, k1, b
-        )
-    else:
-        avgdl = bm25.avgdl(index.sum_total_term_freq, max(index.doc_count, 1))
-        cache = bm25.norm_cache(avgdl, np.float32(k1), np.float32(b))
-    blocks = index.blocks.filter(
-        (F.col("term_bucket") == h60_py(term) % index.n_buckets)
-        & (F.col("term") == term)
-    )
-    end64 = np.int64(end)
-    start64 = np.int64(start)
-
-    def leaf(pdf: pd.DataFrame) -> pd.DataFrame:
-        pt = _PosTerm(pdf)
-        cand = np.unique(pt.all_docs())
-        docs, pos = pt.occurrences(cand)
-        keep = (pos < end64) & (pos >= start64)
-        if not keep.any():
-            return pd.DataFrame(
-                {"doc_id": [], "span_freq": [], "score": []}
-            ).astype({"doc_id": "int64", "span_freq": "int64",
-                      "score": "float64" if precision == "double"
-                      else "float32"})
-        hit_docs, sf = np.unique(docs[keep], return_counts=True)
-        nb = pt.norms_for(hit_docs)
-        if precision == "double":
-            norm = cache[nb & 0xFF]
-            score = w * (sf / (sf + norm))
-        else:
-            score = bm25.score_term(sf.astype(np.int64), nb, np.float32(w),
-                                    cache)
-        return pd.DataFrame(
-            {"doc_id": hit_docs, "span_freq": sf.astype(np.int64),
-             "score": score}
-        )
-
-    local = blocks.groupBy("seg_group").applyInPandas(
-        leaf, schema=f"doc_id long, span_freq long, score {score_type}"
-    )
-    out = local.orderBy(F.desc("score"), F.asc("doc_id"))
-    return out.limit(k) if k is not None else out
 
 
 def _span_env(index, df_by_term, idf_terms, boost, k1, b, precision):
@@ -462,7 +286,7 @@ def _span_env(index, df_by_term, idf_terms, boost, k1, b, precision):
 def _run_span(
     index,
     needed: Sequence[str],
-    required: Sequence[str],
+    required: Sequence,
     leaf_hits,
     k: int | None,
     boost: float,
@@ -470,76 +294,71 @@ def _run_span(
     b,
     precision: str,
     idf_terms: Sequence[str] | None = None,
+    freq_col: str = "span_freq",
 ):
-    """Shared span-query runner: df lookup (``SegmentedIndex.lookup_df``),
-    pinned BM25 span scoring env, per-``seg_group``-leaf matching over
-    the needed terms' positional blocks only.
+    """The positional-query runner: df lookup (``SegmentedIndex.
+    lookup_df``), pinned BM25 span scoring env, per-``seg_group``-leaf
+    matching over the needed terms' positional blocks only.
 
-    leaf_hits(pts: dict[term, _PosTerm]) -> (hit_docs int64, span_freq
-    int64); terms in ``required`` that miss the dictionary (or a leaf)
-    short-circuit to empty — span composition is conjunctive across its
-    required inputs."""
+    leaf_hits(pts: dict[term, _PosTerm]) -> (hit_docs int64, freq int64).
+    Each entry of ``required`` is a term, or a tuple of alternative
+    terms; one with no term in the dictionary (or in a leaf)
+    short-circuits to empty — span composition is conjunctive across its
+    required inputs. ``idf_terms`` (default ``needed``) keeps duplicates.
+    Returns DataFrame(doc_id long, <freq_col> long, score) ordered by
+    (score desc, doc_id asc), the top-k unless ``k`` is None."""
     from ..operators.hashing import h60_py
 
     if not getattr(index, "has_positions", False):
-        raise ValueError("span queries need a positional index")
-    score_type = "double" if precision == "double" else "float"
-    fp_dtype = "float64" if precision == "double" else "float32"
-    spark = index.blocks.sparkSession
-    empty = spark.createDataFrame(
-        [], f"doc_id long, span_freq long, score {score_type}"
-    )
+        raise ValueError(
+            "index was built without positions "
+            "(build_segmented_index(..., index_positions=True))"
+        )
+    double = precision == "double"
+    schema = f"doc_id long, {freq_col} long, score {'double' if double else 'float'}"
     needed = list(dict.fromkeys(needed))
-    buckets = sorted({h60_py(t) % index.n_buckets for t in needed})
+    req = [(r,) if isinstance(r, str) else tuple(r) for r in required]
     df_by_term = index.lookup_df(needed)
-    if any(t not in df_by_term for t in required):
-        return empty
     present = [t for t in needed if t in df_by_term]
-    if not present:
-        return empty
-    idf_terms = [
-        t for t in (idf_terms if idf_terms is not None else needed)
-        if t in df_by_term
-    ]
+    if not present or not all(any(t in df_by_term for t in alts) for alts in req):
+        # a local Arrow relation: building and collecting it run no job
+        empty = pa.schema([
+            ("doc_id", pa.int64()), (freq_col, pa.int64()),
+            ("score", pa.float64() if double else pa.float32()),
+        ]).empty_table()
+        return index.blocks.sparkSession.createDataFrame(empty, schema)
     w_sum, cache = _span_env(
-        index, df_by_term, idf_terms, boost, k1, b, precision
+        index, df_by_term,
+        [t for t in (needed if idf_terms is None else idf_terms) if t in df_by_term],
+        boost, k1, b, precision,
     )
+    buckets = sorted({h60_py(t) % index.n_buckets for t in present})
     blocks = index.blocks.filter(
         F.col("term_bucket").isin(buckets) & F.col("term").isin(present)
-    )
-    req = tuple(required)
+    ).select(*LEAF_COLUMNS)
 
     def leaf(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame(
-            {"doc_id": [], "span_freq": [], "score": []}
-        ).astype({"doc_id": "int64", "span_freq": "int64",
-                  "score": fp_dtype})
         pts = {t: _PosTerm(g) for t, g in pdf.groupby("term")}
-        if any(t not in pts for t in req):
-            return out_empty
-        hit_docs, sf = leaf_hits(pts)
-        if not len(hit_docs):
-            return out_empty
+        if all(any(t in pts for t in alts) for alts in req):
+            hit_docs, freq = leaf_hits(pts)
+        else:
+            hit_docs = freq = np.empty(0, np.int64)
         norms = np.zeros(len(hit_docs), dtype=np.int64)
         for pt in pts.values():
             if norms.all():
                 break
-            extra = pt.norms_for(hit_docs)
-            norms = np.where(norms > 0, norms, extra)
-        if precision == "double":
-            score = float(w_sum) * (sf / (sf + cache[norms & 0xFF]))
+            norms = np.where(norms > 0, norms, pt.norms_for(hit_docs))
+        if double:
+            score = float(w_sum) * (freq / (freq + cache[norms & 0xFF]))
         else:
             score = bm25.score_term(
-                sf.astype(np.int64), norms, np.float32(w_sum), cache
+                freq.astype(np.int64), norms, np.float32(w_sum), cache
             )
         return pd.DataFrame(
-            {"doc_id": hit_docs, "span_freq": sf.astype(np.int64),
-             "score": score}
+            {"doc_id": hit_docs, freq_col: freq.astype(np.int64), "score": score}
         )
 
-    local = blocks.groupBy("seg_group").applyInPandas(
-        leaf, schema=f"doc_id long, span_freq long, score {score_type}"
-    )
+    local = blocks.groupBy("seg_group").applyInPandas(leaf, schema=schema)
     out = local.orderBy(F.desc("score"), F.asc("doc_id"))
     return out.limit(k) if k is not None else out
 
@@ -566,9 +385,7 @@ def span_or(
             pt = pts.get(t)
             if pt is None:
                 continue
-            cand = np.unique(pt.all_docs())
-            d, _ = pt.occurrences(cand)
-            parts.append(d)
+            parts.append(pt.occurrences()[0])
         if not parts:
             return np.empty(0, np.int64), np.empty(0, np.int64)
         return np.unique(np.concatenate(parts), return_counts=True)
@@ -588,7 +405,7 @@ def _ordered_pairs(pts, first: str, second: str, slop: int):
     span (0..1) is emitted, never (0..2)). Returns packed
     (doc*SHIFT + pa) keys → (pair_start_keys, deltas)."""
     a, b_ = pts[first], pts[second]
-    cand = np.intersect1d(np.unique(a.all_docs()), np.unique(b_.all_docs()))
+    cand = np.intersect1d(a.all_docs(), b_.all_docs())
     if not len(cand):
         z = np.empty(0, np.int64)
         return z, z
@@ -632,9 +449,7 @@ def span_within(
 
     def leaf_hits(pts):
         starts, deltas = _ordered_pairs(pts, a_term, b_term, slop)
-        lt = pts[little]
-        cand = np.unique(lt.all_docs())
-        dl, pl = lt.occurrences(cand)
+        dl, pl = pts[little].occurrences()
         kl = dl * _POS_SHIFT + pl  # doc-then-pos ascending already
         if not len(starts) or not len(kl):
             return np.empty(0, np.int64), np.empty(0, np.int64)
@@ -675,9 +490,7 @@ def span_containing(
 
     def leaf_hits(pts):
         starts, deltas = _ordered_pairs(pts, a_term, b_term, slop)
-        lt = pts[little]
-        cand = np.unique(lt.all_docs())
-        dl, pl = lt.occurrences(cand)
+        dl, pl = pts[little].occurrences()
         kl = dl * _POS_SHIFT + pl
         if not len(starts) or not len(kl):
             return np.empty(0, np.int64), np.empty(0, np.int64)
@@ -721,9 +534,7 @@ def interval_ordered(
 
     def leaf_hits(pts):
         a, b_ = pts[first], pts[second]
-        cand = np.intersect1d(
-            np.unique(a.all_docs()), np.unique(b_.all_docs())
-        )
+        cand = np.intersect1d(a.all_docs(), b_.all_docs())
         if not len(cand):
             return np.empty(0, np.int64), np.empty(0, np.int64)
         da, pa = a.occurrences(cand)
@@ -794,92 +605,23 @@ def span_not(
     pre/post slack constructor). Scoring contract as span_first: BM25
     with freq = qualifying occurrences, idf from the include term.
 
-    Plan shape: BOTH terms' positional blocks (bucket-pruned) per
-    seg_group leaf; the exclusion check is one vectorized searchsorted
-    over the exclude occurrences of docs that contain the include term
-    — never the corpus."""
-    from ..operators.hashing import h60_py
+    Both terms' positional blocks reach the leaf; the exclusion check is
+    one vectorized searchsorted over the exclude occurrences of docs
+    that contain the include term — never the corpus."""
 
-    score_type = "double" if precision == "double" else "float"
-    spark = index.blocks.sparkSession
-    empty = spark.createDataFrame(
-        [], f"doc_id long, span_freq long, score {score_type}"
-    )
-    if not getattr(index, "has_positions", False):
-        raise ValueError("span_not needs a positional index")
-    df_by_term = index.lookup_df([include])
-    if not df_by_term:
-        return empty
-    weights = dict(
-        term_weights(
-            df_by_term, index.doc_count, [include], boost, k1, b, precision,
-        )
-    )
-    w = float(weights[include])
-    if precision == "double":
-        from .scoring import double_norm_cache
-
-        cache = double_norm_cache(
-            index.sum_total_term_freq, index.doc_count, k1, b
-        )
-    else:
-        avgdl = bm25.avgdl(index.sum_total_term_freq, max(index.doc_count, 1))
-        cache = bm25.norm_cache(avgdl, np.float32(k1), np.float32(b))
-    buckets = sorted(
-        {h60_py(t) % index.n_buckets for t in (include, exclude)}
-    )
-    blocks = index.blocks.filter(
-        F.col("term_bucket").isin(buckets)
-        & F.col("term").isin([include, exclude])
-    )
-    pre64, post64 = np.int64(pre), np.int64(post)
-    fp_dtype = "float64" if precision == "double" else "float32"
-
-    def leaf(pdf: pd.DataFrame) -> pd.DataFrame:
-        inc_pdf = pdf[pdf["term"] == include]
-        if not len(inc_pdf):
-            return pd.DataFrame(
-                {"doc_id": [], "span_freq": [], "score": []}
-            ).astype({"doc_id": "int64", "span_freq": "int64",
-                      "score": fp_dtype})
-        inc = _PosTerm(inc_pdf)
-        cand = np.unique(inc.all_docs())
-        docs_a, pos_a = inc.occurrences(cand)
+    def leaf_hits(pts):
+        docs_a, pos_a = pts[include].occurrences()
         bad = np.zeros(len(docs_a), dtype=bool)
-        exc_pdf = pdf[pdf["term"] == exclude]
-        if len(exc_pdf) and len(docs_a):
-            exc = _PosTerm(exc_pdf)
-            docs_b, pos_b = exc.occurrences(np.unique(docs_a))
-            if len(docs_b):
-                key_b = docs_b * _POS_SHIFT + pos_b  # doc-then-pos sorted
-                lo = np.searchsorted(
-                    key_b, docs_a * _POS_SHIFT + (pos_a - pre64), "left"
-                )
-                hi = np.searchsorted(
-                    key_b, docs_a * _POS_SHIFT + (pos_a + post64), "right"
-                )
-                bad = hi > lo
-        keep = ~bad
-        if not keep.any():
-            return pd.DataFrame(
-                {"doc_id": [], "span_freq": [], "score": []}
-            ).astype({"doc_id": "int64", "span_freq": "int64",
-                      "score": fp_dtype})
-        hit_docs, sf = np.unique(docs_a[keep], return_counts=True)
-        nb = inc.norms_for(hit_docs)
-        if precision == "double":
-            norm = cache[nb & 0xFF]
-            score = w * (sf / (sf + norm))
-        else:
-            score = bm25.score_term(sf.astype(np.int64), nb, np.float32(w),
-                                    cache)
-        return pd.DataFrame(
-            {"doc_id": hit_docs, "span_freq": sf.astype(np.int64),
-             "score": score}
-        )
+        if exclude in pts:
+            docs_b, pos_b = pts[exclude].occurrences(np.unique(docs_a))
+            key_b = docs_b * _POS_SHIFT + pos_b  # doc-then-pos sorted
+            key_a = docs_a * _POS_SHIFT + pos_a
+            bad = np.searchsorted(key_b, key_a + post, "right") > np.searchsorted(
+                key_b, key_a - pre, "left"
+            )
+        return np.unique(docs_a[~bad], return_counts=True)
 
-    local = blocks.groupBy("seg_group").applyInPandas(
-        leaf, schema=f"doc_id long, span_freq long, score {score_type}"
+    return _run_span(
+        index, [include, exclude], [include], leaf_hits, k, boost, k1, b,
+        precision, idf_terms=[include],
     )
-    out = local.orderBy(F.desc("score"), F.asc("doc_id"))
-    return out.limit(k) if k is not None else out

@@ -1,12 +1,13 @@
 """Codec round-trips + impacts frontier properties (hypothesis)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from lucene_solr_spark.index.codec import (
     BLOCK_SIZE,
-    decode_block,
+    decode_blocks,
     decode_vints,
     encode_posting_blocks,
     encode_vints,
@@ -79,7 +80,7 @@ def test_posting_blocks_roundtrip(n, base):
     assert len(blocks) == (n + BLOCK_SIZE - 1) // BLOCK_SIZE
     rd, rf = [], []
     for first, last, nd, db, fb, impf, impn in blocks:
-        d, f = decode_block(db, fb)
+        d, f, _, _ = decode_blocks([nd], [db], [fb], [b""])
         assert d[0] == first and d[-1] == last and len(d) == nd
         rd.append(d)
         rf.append(f)
@@ -98,7 +99,7 @@ def test_all_equal_gap_block():
     freqs = np.ones(256, dtype=np.int64)
     blocks = encode_posting_blocks(doc_ids, freqs, np.full(256, 17))
     assert len(blocks) == 2
-    d0, f0 = decode_block(blocks[0][3], blocks[0][4])
+    d0, _, _, _ = decode_blocks([128], [blocks[0][3]], [blocks[0][4]], [b""])
     np.testing.assert_array_equal(d0, doc_ids[:128])
 
 
@@ -148,9 +149,7 @@ def test_positions_roundtrip_batch():
     """Per-posting delta-varint positions, sliced per block, decode back
     exactly (the .pos stream analog —
     codecs/lucene50/Lucene50PostingsFormat.java:48-58)."""
-    from lucene_solr_spark.index.codec import (
-        decode_positions, encode_posting_blocks_batch,
-    )
+    from lucene_solr_spark.index.codec import encode_posting_blocks_batch
 
     rng = np.random.default_rng(7)
     tc_l, d_l, f_l, n_l, pos_l = [], [], [], [], []
@@ -171,19 +170,32 @@ def test_positions_roundtrip_batch():
     flat_pos = np.concatenate(pos_l)
 
     out = encode_posting_blocks_batch(tc, dd, ff, nn, positions=flat_pos)
-    bt, db, fb, pb = out[0], out[5], out[6], out[10]
-    tok = 0
-    for bi in range(len(bt)):
-        d, f = decode_block(db[bi], fb[bi])
-        flat, offs = decode_positions(pb[bi], f)
-        for j in range(len(d)):
-            np.testing.assert_array_equal(
-                flat[offs[j]: offs[j + 1]], flat_pos[tok: tok + f[j]]
-            )
-            tok += f[j]
-    assert tok == len(flat_pos)
+    nd, db, fb, nb, pb = out[3], out[5], out[6], out[7], out[10]
+    d, f, n, pos = decode_blocks(nd, db, fb, nb, pb)
+    np.testing.assert_array_equal(d, dd)
+    np.testing.assert_array_equal(f, ff)
+    np.testing.assert_array_equal(n, nn)
+    np.testing.assert_array_equal(pos, flat_pos)
     # no-positions path: stable 11-tuple with empty payloads
     assert all(b == b"" for b in encode_posting_blocks_batch(tc, dd, ff, nn)[10])
+
+
+def test_decode_blocks_rejects_position_count_mismatch():
+    """A positions payload that decodes to a count other than Σ freqs is
+    an error naming both counts, not a numpy shape error."""
+    from lucene_solr_spark.index.codec import encode_posting_blocks_batch
+
+    out = encode_posting_blocks_batch(
+        np.zeros(3, np.int64), np.array([1, 5, 9]), np.array([2, 3, 4]),
+        np.full(3, 7), positions=np.array([0, 4, 1, 2, 8, 0, 3, 5, 6]),
+    )
+    nd, db, fb, nb, pb = out[3], out[5], out[6], out[7], out[10]
+    assert len(pb) == 1 and len(pb[0]) == 9  # one block, 1-byte varints
+    for payload, n in [(pb[0][:-2], 7), (b"\x05", 1), (pb[0] + b"\x05", 10)]:
+        with pytest.raises(ValueError, match=f"has {n} entries, freqs imply 9"):
+            decode_blocks(nd, db, fb, nb, [payload])
+    with pytest.raises(ValueError, match="ends inside a value"):
+        decode_blocks(nd, db, fb, nb, [pb[0][:-1] + b"\x86"])
 
 
 # ------------------------- FOR/varint payload container (ForUtil analog)

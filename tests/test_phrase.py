@@ -206,14 +206,17 @@ def test_positions_survive_merge(pos_index):
     """The merged blocks' positions decode to ascending in-doc offsets
     consistent with freqs (CheckIndex posting-consistency analog,
     reference index/CheckIndex.java:1239-1284)."""
-    from lucene_solr_spark.index.codec import decode_block, decode_positions
+    from lucene_solr_spark.index.codec import decode_blocks
 
     rows = pos_index.blocks.limit(200).collect()
     assert rows
     for r in rows:
-        d, f = decode_block(bytes(r["docs"]), bytes(r["freqs"]))
-        flat, offs = decode_positions(bytes(r["positions"]), f)
-        assert offs[-1] == f.sum()
+        d, f, _, flat = decode_blocks(
+            [r["n_docs"]], [bytes(r["docs"])], [bytes(r["freqs"])],
+            [bytes(r["norms"])], [bytes(r["positions"])],
+        )
+        offs = np.concatenate(([0], np.cumsum(f)))
+        assert len(flat) == f.sum()
         for j in range(len(d)):
             p = flat[offs[j]: offs[j + 1]]
             assert len(p) == f[j]
@@ -447,8 +450,10 @@ def test_interval_ordered_minimal(spark, tmp_path):
 
 
 def test_span_family_randomized_vs_brute(spark, tmp_path_factory):
-    """Randomized corpus: span_or / span_within / span_containing /
-    interval_ordered agree with a pure-Python brute-force oracle over
+    """Randomized corpus: every positional entry point (phrases ordered,
+    unordered and multi-slot, span_first / span_position_range /
+    span_not / span_or / span_within / span_containing /
+    interval_ordered) agrees with a pure-Python brute-force oracle over
     the same token lists, across slop/width settings."""
     import random
 
@@ -567,6 +572,100 @@ def test_span_family_randomized_vs_brute(spark, tmp_path_factory):
             if n:
                 want_i[d] = n
         assert got_i == want_i, f"interval width={width}"
+
+    # the phrase, span-first and span-not entry points, in both
+    # precisions: matching docs and freqs against brute force, and each
+    # score against the pinned formula — BM25 with idf = Σ idf over the
+    # query terms (duplicates kept) and the doc's norm byte
+    from lucene_solr_spark.functions import bm25
+    from lucene_solr_spark.search.phrase import (
+        span_first, span_not, span_position_range,
+    )
+    from lucene_solr_spark.search.scoring import double_norm_cache, term_weights
+
+    n_docs, n_tokens = len(toks), sum(len(d) for d in toks.values())
+    assert (idx.doc_count, idx.sum_total_term_freq) == (n_docs, n_tokens)
+    df = {t: sum(t in d for d in toks.values()) for t in vocab}
+    norm_byte = {r["doc_id"]: r["norm_byte"] for r in idx.norms.collect()}
+
+    def chain_ends(d, slots, slop):
+        """Distinct end positions of ordered chains, one occurrence per
+        slot (any alternative), successive gaps in [1, slop+1]."""
+        ends = {p for t in slots[0] for p in occs(d, t)}
+        for alts in slots[1:]:
+            ends = {
+                p for t in alts for p in occs(d, t)
+                if any(1 <= p - q <= slop + 1 for q in ends)
+            }
+        return len(ends)
+
+    def unordered_ends(d, slop):
+        a = occs(d, "aa")
+        return sum(
+            any(q != p and abs(q - p) <= slop + 1 for q in a)
+            for p in occs(d, "bb")
+        )
+
+    def in_range(d, t, start, end):
+        return sum(start <= p < end for p in occs(d, t))
+
+    def not_near(d, pre, post):
+        bs = occs(d, "bb")
+        return sum(
+            not any(p - pre <= q <= p + post for q in bs) for p in occs(d, "aa")
+        )
+
+    cases = [
+        ("phrase_freq", ["aa", "bb"], lambda pr: search_phrase(
+            idx, ["aa", "bb"], 0, precision=pr),
+         lambda d: chain_ends(d, [("aa",), ("bb",)], 0)),
+        ("phrase_freq", ["aa", "bb"], lambda pr: search_phrase(
+            idx, ["aa", "bb"], 2, precision=pr),
+         lambda d: chain_ends(d, [("aa",), ("bb",)], 2)),
+        ("phrase_freq", ["aa", "bb"], lambda pr: search_phrase(
+            idx, ["aa", "bb"], 1, precision=pr, ordered=False),
+         lambda d: unordered_ends(d, 1)),
+        ("phrase_freq", ["aa", "cc", "bb"], lambda pr: search_phrase(
+            idx, [("aa", "cc"), "bb"], 1, precision=pr),
+         lambda d: chain_ends(d, [("aa", "cc"), ("bb",)], 1)),
+        ("phrase_freq", ["aa", "gap", "aa"], lambda pr: search_phrase(
+            idx, ["aa", "gap", "aa"], 0, precision=pr),
+         lambda d: chain_ends(d, [("aa",), ("gap",), ("aa",)], 0)),
+        ("span_freq", ["cc"], lambda pr: span_first(
+            idx, "cc", 6, precision=pr),
+         lambda d: in_range(d, "cc", 0, 6)),
+        ("span_freq", ["bb"], lambda pr: span_position_range(
+            idx, "bb", 3, 12, precision=pr),
+         lambda d: in_range(d, "bb", 3, 12)),
+        ("span_freq", ["aa"], lambda pr: span_not(
+            idx, "aa", "bb", pre=2, post=1, precision=pr),
+         lambda d: not_near(d, 2, 1)),
+    ]
+    for precision in ("double", "float32"):
+        if precision == "double":
+            cache = double_norm_cache(n_tokens, n_docs, bm25.K1, bm25.B)
+        else:
+            cache = bm25.norm_cache(
+                bm25.avgdl(n_tokens, n_docs), np.float32(bm25.K1),
+                np.float32(bm25.B),
+            )
+        for freq_col, idf_terms, run, brute in cases:
+            rows = run(precision).collect()
+            want = {d: n for d in toks if (n := brute(d))}
+            got = {r["doc_id"]: r[freq_col] for r in rows}
+            assert got == want, (precision, idf_terms)
+            w = sum(
+                w for _, w in term_weights(
+                    df, n_docs, idf_terms, 1.0, bm25.K1, bm25.B, precision
+                )
+            )
+            for r in rows:
+                f, nb = np.int64(r[freq_col]), norm_byte[r["doc_id"]]
+                if precision == "double":
+                    assert r["score"] == w * (f / (f + cache[nb]))
+                else:
+                    want_score = bm25.score_term([f], [nb], np.float32(w), cache)
+                    assert np.float32(r["score"]) == want_score[0]
 
 
 def test_complex_phrase_execution(spark, tmp_path):

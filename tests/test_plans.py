@@ -147,7 +147,9 @@ def test_small_wand_query_runs_no_spark_job(spark, topk_index):
 
 def test_phrase_and_span_calls_run_no_lookup_job(spark, topk_index):
     """Phrase and span queries look their terms' df up on the driver: the
-    call that builds the plan launches no Spark job."""
+    call that builds the plan launches no Spark job, and a query with an
+    absent required term returns a local empty result whose collect()
+    launches none either."""
     from lucene_solr_spark import fixtures
     from lucene_solr_spark.search.phrase import (
         search_phrase, span_first, span_not, span_or,
@@ -156,11 +158,43 @@ def test_phrase_and_span_calls_run_no_lookup_job(spark, topk_index):
     v = fixtures.make_vocab()
     store = spark.sparkContext._jsc.sc().statusStore()
     before = store.jobsList(None).size()
-    search_phrase(topk_index, [v[30], v[31]], k=10)
-    span_first(topk_index, v[32], end=3)
-    span_not(topk_index, v[33], v[34])
+    present = [
+        search_phrase(topk_index, [v[30], v[31]], k=10),
+        span_first(topk_index, v[32], end=3),
+        span_not(topk_index, v[33], v[34]),
+    ]
     span_or(topk_index, [v[35], v[36]])
+    absent = [
+        search_phrase(topk_index, [v[30], "zzznotaterm"], k=10),
+        span_first(topk_index, "zzznotaterm", end=3),
+        span_not(topk_index, "zzznotaterm", v[34]),
+    ]
+    assert [df.collect() for df in absent] == [[], [], []]
     assert store.jobsList(None).size() == before
+    assert [df.schema for df in absent] == [df.schema for df in present]
+
+
+def test_positional_leaf_input_is_projected(topk_index):
+    """Phrase and span leaves get only the block columns _PosTerm reads:
+    no impacts, sum_freq or seg_id reach Python."""
+    from lucene_solr_spark import fixtures
+    from lucene_solr_spark.search.phrase import (
+        LEAF_COLUMNS, search_phrase, span_not,
+    )
+
+    v = fixtures.make_vocab()
+    for hits in (
+        search_phrase(topk_index, [v[0], v[1]], k=10),
+        span_not(topk_index, v[0], v[1]),
+    ):
+        leaves = [
+            n for n in _logical_nodes(hits)
+            if n.getClass().getSimpleName() == "FlatMapGroupsInPandas"
+        ]
+        assert len(leaves) == 1
+        out = leaves[0].child().output()
+        cols = [out.apply(i).name() for i in range(out.size())]
+        assert set(cols) == set(LEAF_COLUMNS)
 
 
 def test_geo_cell_index_partition_pruning(spark, tmp_path):

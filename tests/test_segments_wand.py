@@ -18,7 +18,7 @@ import pandas as pd
 import pytest
 
 from lucene_solr_spark.index.builder import transcripts_from_pandas
-from lucene_solr_spark.index.codec import decode_block, decode_positions
+from lucene_solr_spark.index.codec import decode_blocks
 from lucene_solr_spark.index.segments import build_segmented_index, read_segmented_index
 from lucene_solr_spark.search.bruteforce import search_bruteforce
 from lucene_solr_spark.search.wand import search_wand
@@ -35,11 +35,18 @@ def seg_index(spark, tiny_corpus, tmp_path_factory):
     )
 
 
+def _decode_row(r, positions=False):
+    """One block row → decode_blocks' (docs, freqs, norms, positions)."""
+    return decode_blocks(
+        [r["n_docs"]], [bytes(r["docs"])], [bytes(r["freqs"])],
+        [bytes(r["norms"])], [bytes(r["positions"])] if positions else None,
+    )
+
+
 def _decode_all(seg_index) -> pd.DataFrame:
     rows = []
     for r in seg_index.blocks.collect():
-        d, f = decode_block(bytes(r["docs"]), bytes(r["freqs"]))
-        n = np.frombuffer(bytes(r["norms"]), dtype=np.uint8)
+        d, f, n, _ = _decode_row(r)
         for dd, ff, nn in zip(d, f, n):
             rows.append((r["term"], int(dd), int(ff), int(nn)))
     return pd.DataFrame(rows, columns=["term", "doc_id", "freq", "norm"])
@@ -70,8 +77,7 @@ def test_invariants_vs_oracle(seg_index, tiny_oracle):
 
     # impacts dominate every posting in their block
     for r in seg_index.blocks.collect():
-        _, f = decode_block(bytes(r["docs"]), bytes(r["freqs"]))
-        n = np.frombuffer(bytes(r["norms"]), dtype=np.uint8)
+        _, f, n, _ = _decode_row(r)
         impf = np.array(r["impact_freqs"])
         impn = np.array(r["impact_norms"])
         for fi, ni in zip(f, n):
@@ -216,13 +222,12 @@ def _checked_postings(index) -> dict:
     rows = index.blocks.collect()
     for r in sorted(rows, key=lambda r: (r["term"], r["seg_group"], r["first_doc"])):
         t, run = r["term"], (r["term"], r["seg_group"])
-        d, f = decode_block(bytes(r["docs"]), bytes(r["freqs"]))
+        d, f, n, pos = _decode_row(r, positions=True)
         assert (np.diff(d) > 0).all(), t
         assert (d[0], d[-1]) == (r["first_doc"], r["last_doc"]), t
         assert prev.get(run, -1) < d[0], t
         prev[run] = d[-1]
-        n = np.frombuffer(bytes(r["norms"]), dtype=np.uint8)
-        pos, off = decode_positions(bytes(r["positions"]), f)
+        off = np.concatenate(([0], np.cumsum(f)))
         for i, doc in enumerate(d):
             assert (t, int(doc)) not in out, (t, doc)
             out[t, int(doc)] = (int(f[i]), int(n[i]), pos[off[i]:off[i + 1]].tolist())
