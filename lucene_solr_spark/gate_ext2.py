@@ -7405,7 +7405,7 @@ def fts_synonym_query(spark, sf_dir):
     TermStates pull), term-pushed postings summed per doc, broadcast
     norm join, global top-10 on the rounded score."""
     tables = docs_index(spark, sf_dir)
-    from .search.scoring import double_norm_cache
+    from .search.scoring import norm_cache
 
     d = (
         tables.dictionary.filter(F.col("term").isin(_SYNQ_TERMS))
@@ -7417,7 +7417,7 @@ def fts_synonym_query(spark, sf_dir):
     import math
 
     idf = math.log(1 + (n - pdf + 0.5) / (pdf + 0.5))
-    cache = double_norm_cache(t, n, 1.2, 0.75)
+    cache = norm_cache(t, n, 1.2, 0.75, "double")
     cache_df = tables.postings.sparkSession.createDataFrame(
         [(i, float(cache[i])) for i in range(256)],
         "norm_byte int, norm_val double",

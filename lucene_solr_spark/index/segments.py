@@ -98,6 +98,12 @@ def _decode_postings(batches):
         )
 
 
+def _decoded(blocks: DataFrame) -> DataFrame:
+    return blocks.select("term", "n_docs", "docs", "freqs", "norms").mapInArrow(
+        _decode_postings, POSTINGS_SCHEMA
+    )
+
+
 def _encode_segment_arrow(tbl, seg_id: int, index_positions: bool = False):
     """One segment's Arrow table (doc_id, tokens, stored…) → (postings
     pa.Table, norms pa.Table, counters). All heavy steps are Arrow C++ /
@@ -297,17 +303,20 @@ class SegmentedIndex:
 
     The same merged files are read two ways. The DataFrames below feed
     Spark plans that scale with the index: ``blocks`` the block-at-a-time
-    leaves (WAND, phrases, intervals), and ``postings``, a lazy decoded
-    view of the blocks, the relational query surface (brute-force,
-    Boolean executor, splitter, multi-reader, gates). ``lookup_df``,
-    ``read_blocks`` and ``terms_with_prefixes`` read ``merged_dir`` on
-    the driver with ``pyarrow.dataset`` and launch no Spark job: the
-    first serves the dictionary lookup every query makes, the second
-    feeds top-k queries small enough to score in-process
-    (search/wand.py), the third expands multi-term leaves
-    (search/intervals.py). The first two prune to the query terms'
-    term_bucket directories and push the term filter into the parquet
-    scan."""
+    leaves, and ``postings``, a lazy decoded view of the blocks, the
+    relational plans that read every term (splitter, multi-reader,
+    gates). A query reads only its terms: ``blocks_of(terms)`` feeds
+    the WAND and positional leaves, and ``postings_of(terms)``, the
+    decode of those blocks, the relational scorers
+    (search/scoring.py). Both prune the scan to the terms' term_bucket
+    directories and push the term filter into it, which a filter above
+    the decode cannot do. ``lookup_df``, ``read_blocks`` and
+    ``terms_with_prefixes`` read ``merged_dir`` on the driver with
+    ``pyarrow.dataset`` and launch no Spark job: the first serves the
+    dictionary lookup every query makes, the second feeds top-k queries
+    small enough to score in-process (search/wand.py), the third expands
+    multi-term leaves (search/intervals.py). The first two prune the
+    same way."""
 
     blocks: DataFrame      # merged posting blocks (term_bucket-partitioned)
     dictionary: DataFrame  # (term, df, cf)
@@ -326,13 +335,26 @@ class SegmentedIndex:
     # NEW handle), so entries never invalidate.
     df_cache: dict = field(default_factory=dict)
 
+    def _buckets(self, terms) -> list:
+        """The term_bucket directories holding ``terms``, computed on the
+        driver (h60 is the portable md5 hash: no Spark job)."""
+        from ..operators.hashing import h60_py  # local: avoid cycle
+
+        return sorted({h60_py(t) % self.n_buckets for t in terms})
+
     def _term_filter(self, terms):
         import pyarrow.dataset as ds
 
-        from ..operators.hashing import h60_py  # local: avoid cycle
-
-        buckets = sorted({h60_py(t) % self.n_buckets for t in terms})
+        buckets = self._buckets(terms)
         return ds.field("term_bucket").isin(buckets) & ds.field("term").isin(list(terms))
+
+    def blocks_of(self, terms) -> DataFrame:
+        """The merged blocks of ``terms``; the scan reads only their
+        term_bucket directories and pushes the term filter."""
+        terms = list(dict.fromkeys(terms))
+        return self.blocks.filter(
+            F.col("term_bucket").isin(self._buckets(terms)) & F.col("term").isin(terms)
+        )
 
     @cached_property
     def _dictionary_ds(self):
@@ -365,9 +387,12 @@ class SegmentedIndex:
         """(term, doc_id, norm_byte, freq), one row per posting, decoded
         from ``blocks`` by the codec's block decoder. Building it runs
         no job."""
-        return self.blocks.select(
-            "term", "n_docs", "docs", "freqs", "norms"
-        ).mapInArrow(_decode_postings, POSTINGS_SCHEMA)
+        return _decoded(self.blocks)
+
+    def postings_of(self, terms) -> DataFrame:
+        """``postings`` of ``terms``, decoded from ``blocks_of(terms)``
+        only."""
+        return _decoded(self.blocks_of(terms))
 
     def terms_with_prefixes(self, prefixes) -> list:
         """Sorted dictionary terms that start with any of ``prefixes``,

@@ -25,8 +25,10 @@ bytes, stored fields) is carried over untouched.
 
 Scale shape: each part is one filtered scan + one partial/final
 aggregation — no re-tokenization, no driver data. The doc predicate
-pushes into the parquet scans of norms and stored; on a SegmentedIndex
-it filters the postings after the block decode.
+pushes into the parquet scans of norms and stored. A part's postings
+stay a doc filter over the parent's decoded postings: the parent's
+blocks hold every doc id, so a doc predicate prunes no block and a
+query over the part decodes all of its terms' blocks.
 """
 
 from __future__ import annotations
@@ -58,6 +60,9 @@ class IndexTables:
     doc_count : docs with the field (>= 1 token)
     sum_total_term_freq : total token count
     max_doc   : doc id space size
+
+    ``postings_of`` and ``lookup_df`` answer a query's reads the way a
+    SegmentedIndex's do, over these relations.
     """
 
     postings: DataFrame
@@ -67,6 +72,18 @@ class IndexTables:
     doc_count: int
     sum_total_term_freq: int
     max_doc: int
+
+    def postings_of(self, terms) -> DataFrame:
+        """``postings`` of ``terms``."""
+        return self.postings.filter(F.col("term").isin(list(terms)))
+
+    def lookup_df(self, terms) -> dict:
+        """term -> df for those of ``terms`` in the dictionary (one
+        collect)."""
+        rows = self.dictionary.filter(
+            F.col("term").isin(list(dict.fromkeys(terms)))
+        ).select("term", "df").collect()
+        return {r["term"]: int(r["df"]) for r in rows}
 
 
 def filter_index(tables, keep: Column) -> IndexTables:

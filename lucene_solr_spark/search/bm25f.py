@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import smallfloat
+from .scoring import empty_scores
 
 __all__ = ["bm25f"]
 
@@ -74,29 +75,24 @@ def bm25f(
     (doc_id long, score double) top-k under BM25F combined-field
     scoring, ordered (score desc, doc_id asc)."""
     items = list(fields.items())
-    spark = items[0][1][0].postings.sparkSession
+    spark = items[0][1][0].dictionary.sparkSession
     uniq = list(dict.fromkeys(terms))
 
-    # Pseudo-term + pseudo-collection statistics (driver scalars,
-    # bounded by |fields| single-row aggregates).
+    # Pseudo-term + pseudo-collection statistics (driver scalars, one
+    # dictionary lookup per field).
     df_max = 0
     doc_count = 0
     sum_ttf = 0
     for _name, (tables, w) in items:
-        row = (
-            tables.dictionary.filter(F.col("term").isin(uniq))
-            .agg(F.max("df").alias("df"))
-            .collect()[0]
-        )
-        df_max = max(df_max, int(row["df"] or 0))
+        df_max = max([df_max, *tables.lookup_df(uniq).values()])
         doc_count = max(doc_count, int(tables.doc_count))
         sum_ttf += int(w * tables.sum_total_term_freq)
     if df_max == 0:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_scores(spark, "double")
 
     # Per-doc pseudo-freq: weighted union of the per-field postings.
     parts = [
-        tables.postings.filter(F.col("term").isin(uniq)).select(
+        tables.postings_of(uniq).select(
             "doc_id",
             (F.lit(float(w)) * F.col("freq").cast("double")).alias("wf"),
         )

@@ -6,11 +6,12 @@ posting, aggregate per doc, global top-k. This is both a production path
 verified against (reference pattern:
 test-framework/.../search/CheckHits.java:576-591).
 
-Scoring is 100% JVM-native (whole-stage codegen): the float32 cast points
-of BM25Similarity are reproduced with Spark `cast("float")` and float
-arithmetic; the only Python is driver-side computation of per-term
-weights and the 256-entry norm cache (numpy float32, exact), shipped as
-tiny broadcast-join tables.
+Scoring is 100% JVM-native (whole-stage codegen) over
+``scoring.scored_postings``: the float32 cast points of BM25Similarity
+are reproduced with Spark `cast("float")` and float arithmetic; the only
+Python is driver-side computation of per-term weights and the 256-entry
+norm cache (numpy float32, exact), shipped as tiny broadcast-join
+tables.
 
 Order-independence of the score sum: per-term float32 scores are summed
 as doubles. Each float32 is exact in float64, term scores of one doc stay
@@ -25,11 +26,11 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import bm25
-from .scoring import score_components, term_weights
+from .scoring import empty_scores, scored_postings, term_weights
 
 __all__ = ["search_bruteforce"]
 
@@ -50,7 +51,7 @@ def search_bruteforce(
     """→ DataFrame(doc_id long, score float|double) ordered by (score
     desc, doc_id asc), limited to k (k=None: all matches, unordered).
     Empty for unmatchable queries. precision="double" runs the SQL-
-    reproducible double pipeline (see scoring.score_components).
+    reproducible double pipeline (see scoring.norm_cache).
 
     mode: "disjunctive" (SHOULD/sum), "conjunctive" (MUST/sum),
     "dismax" (per-doc max over clause scores plus ``tie`` times the
@@ -59,24 +60,13 @@ def search_bruteforce(
     DisjunctionMaxScorer.java:84-95). min_should_match: keep docs
     matching >= m clauses (BooleanQuery minimumNumberShouldMatch,
     search/BooleanQuery.java:138-167)."""
-    spark = tables.postings.sparkSession
-    weights_df, cache_df, n_present = score_components(
-        spark, tables, terms, boost, k1, b, precision
+    weights = term_weights(
+        tables.lookup_df(terms), tables.doc_count, terms, boost, k1, b, precision
     )
-    num_type = "double" if precision == "double" else "float"
-    empty = spark.createDataFrame([], f"doc_id long, score {num_type}")
+    n_present = len(weights)
     if n_present == 0 or (mode == "conjunctive" and n_present < len(terms)):
-        return empty
-
-    tf = F.col("freq").cast("double") / (
-        F.col("freq").cast("double") + F.col("norm_val").cast("double")
-    )
-    if precision != "double":
-        tf = tf.cast("float")
-    scored = tables.postings.join(F.broadcast(weights_df), "term")
-    scored = scored.join(F.broadcast(cache_df), "norm_byte").withColumn(
-        "term_score", F.col("weight") * tf
-    )
+        return empty_scores(tables.dictionary.sparkSession, precision)
+    scored = scored_postings(tables, weights, k1, b, precision)
     if mode == "dismax":
         score_agg = F.max("term_score")
         if tie:

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import smallfloat
+from .scoring import empty_scores
 
 __all__ = ["search_classic"]
 
@@ -41,23 +42,14 @@ def search_classic(
 
     → DataFrame(doc_id long, score double) ordered by
     (score desc, doc_id asc)."""
-    spark = tables.postings.sparkSession
-    uniq = list(dict.fromkeys(terms))
-    rows = (
-        tables.dictionary.filter(tables.dictionary.term.isin(uniq))
-        .select("term", "df")
-        .collect()
-    )
-    if not rows:
-        return spark.createDataFrame([], "doc_id long, score double")
+    spark = tables.dictionary.sparkSession
+    df_by_term = tables.lookup_df(terms)
+    if not df_by_term:
+        return empty_scores(spark, "double")
     n = max(tables.doc_count, 1)
     weights = [
-        (
-            r["term"],
-            float(boost)
-            * float(np.log((n + 1.0) / (int(r["df"]) + 1.0)) + 1.0) ** 2,
-        )
-        for r in rows
+        (t, float(boost) * float(np.log((n + 1.0) / (df + 1.0)) + 1.0) ** 2)
+        for t, df in df_by_term.items()
     ]
     # inverse-sqrt length norm over the decoded one-byte quantized dl
     qdl = smallfloat.byte4_to_int(np.arange(256)).astype(np.float64)
@@ -68,8 +60,7 @@ def search_classic(
         "norm_byte int, inv_sqrt_dl double",
     )
     scored = (
-        tables.postings.filter(F.col("term").isin([t for t, _ in weights]))
-        .join(F.broadcast(weights_df), "term")
+        tables.postings_of(df_by_term).join(F.broadcast(weights_df), "term")
     )
     scored = scored.join(F.broadcast(cache_df), "norm_byte")
     out = (

@@ -30,12 +30,7 @@ def split_by_frequency(
     tables, terms: list, max_term_frequency: float = 0.4
 ) -> tuple:
     """(rare, common) by df <= max_term_frequency * doc_count."""
-    dfs = {
-        r["term"]: r["df"]
-        for r in tables.dictionary.filter(
-            F.col("term").isin(list(terms))
-        ).select("term", "df").collect()
-    }
+    dfs = tables.lookup_df(terms)
     cutoff = max_term_frequency * tables.doc_count
     rare = [t for t in terms if dfs.get(t, 0) <= cutoff]
     common = [t for t in terms if t in dfs and t not in rare]

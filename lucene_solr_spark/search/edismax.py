@@ -13,8 +13,8 @@ score(doc) = Σ_term [ max_f(qf_f · bm25_f(term, doc))
 
 Every field is its own index (its own df/avgdl/norms — exactly the
 reference's per-field statistics). Plan shape: one scored posting
-frame per field (broadcast weights + norm cache, same as bruteforce),
-a union, and two hash-aggs (per-(doc, term) dismax, then per-doc sum)
+frame per field (scoring.scored_postings, the brute-force scorer's
+relation), a union, and two hash-aggs (per-(doc, term) dismax, then per-doc sum)
 — co-partitioned on doc_id, no driver collect.
 """
 
@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import bm25
-from .scoring import score_components
+from .scoring import empty_scores, scored_postings, term_weights
 
 __all__ = ["edismax"]
 
@@ -47,35 +47,20 @@ def edismax(
     (score desc, doc_id asc); k=None returns every match unordered by
     rank but sorted stably for export."""
     frames = []
-    spark = None
     for fname, tbl in field_tables.items():
-        spark = tbl.postings.sparkSession
         boost = float(qf.get(fname, 1.0))
-        weights_df, cache_df, n_present = score_components(
-            spark, tbl, terms, boost, k1, b, precision
+        weights = term_weights(
+            tbl.lookup_df(terms), tbl.doc_count, terms, boost, k1, b, precision
         )
-        if n_present == 0:
-            continue
-        tf = F.col("freq").cast("double") / (
-            F.col("freq").cast("double") + F.col("norm_val").cast("double")
-        )
-        if precision != "double":
-            tf = tf.cast("float")
-        scored = (
-            tbl.postings.filter(F.col("term").isin(list(terms)))
-            .join(F.broadcast(weights_df), "term")
-        )
-        scored = scored.join(F.broadcast(cache_df), "norm_byte")
-        frames.append(
-            scored.select(
-                "doc_id", "term",
-                (F.col("weight") * tf).cast("double").alias("s"),
-            )
-        )
+        if weights:
+            frames.append(scored_postings(tbl, weights, k1, b, precision).select(
+                "doc_id", "term", F.col("term_score").cast("double").alias("s"),
+            ))
     num_type = "double" if precision == "double" else "float"
     if not frames:
-        return field_tables[next(iter(field_tables))].postings.sparkSession \
-            .createDataFrame([], f"doc_id long, score {num_type}")
+        return empty_scores(
+            next(iter(field_tables.values())).dictionary.sparkSession, precision
+        )
     u = frames[0]
     for fr in frames[1:]:
         u = u.unionByName(fr)

@@ -36,7 +36,7 @@ from ..functions import bm25
 from .bruteforce import search_bruteforce
 from .phrase import search_phrase
 from .queryparser import ParsedQuery, parse_query
-from .scoring import score_components
+from .scoring import empty_scores, scored_postings, term_weights
 
 __all__ = ["execute_parsed"]
 
@@ -63,19 +63,15 @@ def execute_parsed(
     (score desc, doc_id asc), limited to k (k=None: all matches).
     """
     p = parse_query(q, analyzer) if isinstance(q, str) else q
-    spark = tables.postings.sparkSession
     score_type = "double" if precision == "double" else "float"
-    empty = spark.createDataFrame([], f"doc_id long, score {score_type}")
     if p.is_match_none():
-        return empty
+        return empty_scores(tables.dictionary.sparkSession, precision)
     if p.phrases and pos_index is None:
         raise ValueError("query has phrase clauses but no pos_index given")
     if not p.is_simple():
-        return _execute_general(
-            p, tables, pos_index, k, precision, stored, empty
-        )
+        return _execute_general(p, tables, pos_index, k, precision, stored)
     if not p.phrases and not p.terms:
-        return empty
+        return empty_scores(tables.dictionary.sparkSession, precision)
 
     boosts = {t: b for t, b in (p.must + p.should)}
     term_scores = None
@@ -122,9 +118,7 @@ def execute_parsed(
         )
 
     if p.exclude:
-        excl = tables.postings.filter(
-            tables.postings.term.isin(list(p.exclude))
-        ).select("doc_id").distinct()
+        excl = tables.postings_of(p.exclude).select("doc_id").distinct()
         combined = combined.join(excl, "doc_id", "left_anti")
 
     combined = combined.select(
@@ -227,12 +221,10 @@ def _execute_general(
     k: int | None,
     precision: str,
     stored: DataFrame | None,
-    empty: DataFrame,
 ) -> DataFrame:
     """Full-grammar execution: must + required-disjunction groups +
     optional should + phrases + field/range filters + must_not, over a
     single per-(doc, term) score table (one scan, one aggregation)."""
-    spark = tables.postings.sparkSession
     score_type = "double" if precision == "double" else "float"
     if (p.filters or p.neg_filters) and stored is None:
         raise ValueError("query has field/range filters but no stored given")
@@ -244,25 +236,20 @@ def _execute_general(
     all_terms = list(boosts)
     scoring = None
     if all_terms:
-        weights_df, cache_df, n_present, present = score_components(
-            spark, tables, all_terms, boosts, bm25.K1, bm25.B, precision,
-            with_present=True,
+        weights = term_weights(
+            tables.lookup_df(all_terms), tables.doc_count, all_terms, boosts,
+            bm25.K1, bm25.B, precision,
         )
+        present = {t for t, _ in weights}
         # a MUST term absent from the index can never match; a group with
         # no present member likewise (BooleanWeight: empty scorer → null)
-        if any(t not in present for t, _ in p.must):
-            return empty
-        if any(all(t not in present for t, _ in g) for g in p.groups):
-            return empty
-        tf = F.col("freq").cast("double") / (
-            F.col("freq").cast("double") + F.col("norm_val").cast("double")
-        )
-        if precision != "double":
-            tf = tf.cast("float")
-        scoring = tables.postings.join(F.broadcast(weights_df), "term")
-        scoring = scoring.join(F.broadcast(cache_df), "norm_byte").select(
-            "doc_id", "term", (F.col("weight") * tf).alias("term_score")
-        )
+        if any(t not in present for t, _ in p.must) or any(
+            all(t not in present for t, _ in g) for g in p.groups
+        ):
+            return empty_scores(tables.dictionary.sparkSession, precision)
+        scoring = scored_postings(
+            tables, weights, bm25.K1, bm25.B, precision
+        ).select("doc_id", "term", "term_score")
 
     must_terms = {t for t, _ in p.must}
     group_sets = [{t for t, _ in g} for g in p.groups]
@@ -362,7 +349,7 @@ def _execute_general(
                 .withColumn("score", F.lit(1.0).cast("double"))
             )
         else:
-            return empty
+            return empty_scores(tables.dictionary.sparkSession, precision)
     elif opt is not None:  # ReqOptSumScorer
         base = base.join(opt, "doc_id", "left").select(
             "doc_id",
@@ -378,9 +365,7 @@ def _execute_general(
             F.broadcast(_filter_docs(stored, spec)), "doc_id", "anti"
         )
     if p.exclude:
-        excl = tables.postings.filter(
-            tables.postings.term.isin(list(p.exclude))
-        ).select("doc_id").distinct()
+        excl = tables.postings_of(p.exclude).select("doc_id").distinct()
         base = base.join(excl, "doc_id", "left_anti")
     for e in p.expansions:  # prohibited expansions: -vect* (ReqExcl)
         if e[0] == "must_not":

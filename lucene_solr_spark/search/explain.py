@@ -16,9 +16,10 @@ contribution (weight*tf_score). Sum of contribution over terms == the
 engine's score for the doc (double pipeline; the float32 path is the
 serving path, see gate.py docstring).
 
-Scale shape: identical to one brute-force scoring pass — postings
-semi-joined to the (broadcast) query terms, norms joined per surviving
-doc; no extra shuffle vs scoring itself.
+Scale shape: one brute-force scoring pass (scoring.scored_postings —
+the query terms' postings, broadcast weights and norm cache) with norms
+joined per surviving doc for ``dl``; df comes from the dictionary
+lookup the weights already made.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import bm25
-from .scoring import score_components
+from .scoring import empty_frame, scored_postings, term_weights
 
 
 def explain_scores(
@@ -39,48 +40,31 @@ def explain_scores(
     precision: str = "double",
 ) -> DataFrame:
     """Per-(doc, term) BM25 factor breakdown for every matching doc."""
-    spark = tables.postings.sparkSession
-    weights_df, cache_df, n_present = score_components(
-        spark, tables, terms, boost, k1, b, precision
+    df_by_term = tables.lookup_df(terms)
+    weights = term_weights(
+        df_by_term, tables.doc_count, terms, boost, k1, b, precision
     )
     num_type = "double" if precision == "double" else "float"
-    if n_present == 0:
-        return spark.createDataFrame(
-            [],
+    if not weights:
+        return empty_frame(
+            tables.dictionary.sparkSession,
             f"doc_id long, term string, freq long, df long, weight {num_type},"
             f" dl int, norm_val {num_type}, tf_score {num_type},"
             f" contribution {num_type}",
         )
-    tf = F.col("freq").cast("double") / (
-        F.col("freq").cast("double") + F.col("norm_val").cast("double")
-    )
-    if precision != "double":
-        tf = tf.cast("float")
+    df_of = F.create_map(*(F.lit(x) for kv in df_by_term.items() for x in kv))
     return (
-        tables.postings.join(F.broadcast(weights_df), "term")
-        .join(
-            # prune the dictionary to the query terms BEFORE broadcasting
-            # (the full dictionary is tens of GB at corpus scale)
-            F.broadcast(
-                tables.dictionary.select("term", "df").filter(
-                    F.col("term").isin(list(dict.fromkeys(terms)))
-                )
-            ),
-            "term",
-        )
-        .join(tables.norms.select("doc_id", "norm_byte", "dl"), "doc_id")
-        .join(F.broadcast(cache_df), "norm_byte")
-        .withColumn("tf_score", tf)
-        .withColumn("contribution", F.col("weight") * F.col("tf_score"))
+        scored_postings(tables, weights, k1, b, precision)
+        .join(tables.norms.select("doc_id", "dl"), "doc_id")
         .select(
             "doc_id",
             "term",
             F.col("freq").cast("long").alias("freq"),
-            F.col("df").cast("long").alias("df"),
+            df_of[F.col("term")].cast("long").alias("df"),
             "weight",
             F.col("dl").cast("int").alias("dl"),
             "norm_val",
             "tf_score",
-            "contribution",
+            F.col("term_score").alias("contribution"),
         )
     )

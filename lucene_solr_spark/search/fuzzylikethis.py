@@ -37,10 +37,10 @@ divergence absorbed by the rounding.
 
 Plan shape at scale: the expansion is a pruned dictionary scan
 returning ≤ |source terms| × candidates rows to the driver (exactly
-the TermsEnum walk the reference does driver-side), then one
-term-pushed posting scan joined to broadcast weights and the broadcast
-256-row norm cache — cost scales with the kept variants' postings,
-never the corpus.
+the TermsEnum walk the reference does driver-side), then the standard
+scorer relation (scoring.scored_postings: the kept variants' postings
+joined to broadcast weights and the broadcast 256-row norm cache) —
+cost scales with the kept variants' postings, never the corpus.
 """
 
 from __future__ import annotations
@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..functions import bm25
 from ..functions.editdist import damerau_levenshtein
+from .scoring import empty_scores, scored_postings
 
 __all__ = ["fuzzy_like_this"]
 
@@ -72,7 +73,6 @@ def fuzzy_like_this(
     deduped in first-seen order as the reference's processedTerms set).
     → DataFrame(doc_id long, score double) ordered
     (score desc, doc_id asc)."""
-    spark = tables.postings.sparkSession
     n_docs = int(tables.doc_count)
     all_scored = []  # (variant term, st.score)
     for src in dict.fromkeys(source_terms):
@@ -107,7 +107,7 @@ def fuzzy_like_this(
             all_scored.append((term, boost * boost * idf_src, src))
 
     if not all_scored:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_scores(tables.dictionary.sparkSession, "double")
     # (score desc, term asc) per ScoreTermQueue.lessThan; the source
     # term as a final key pins exact-duplicate order the reference's
     # queue leaves unspecified (declared refinement).
@@ -117,29 +117,8 @@ def fuzzy_like_this(
     # Search-time BM25 with the ARTIFICIAL df=1 term statistics.
     idf1 = math.log(1.0 + (n_docs - 1 + 0.5) / (1 + 0.5))
     weights = [(t, s * idf1) for t, s in kept]
-    from .scoring import double_norm_cache
-
-    cache = double_norm_cache(
-        tables.sum_total_term_freq, tables.doc_count, k1, b
-    )
-    weights_df = spark.createDataFrame(weights, "term string, weight double")
-    cache_df = spark.createDataFrame(
-        [(i, float(cache[i])) for i in range(256)],
-        "norm_byte int, norm_val double",
-    )
-    scored = tables.postings.filter(
-        F.col("term").isin([t for t, _ in weights])
-    ).join(F.broadcast(weights_df), "term")
     out = (
-        scored.join(F.broadcast(cache_df), "norm_byte")
-        .withColumn(
-            "term_score",
-            F.col("weight")
-            * (
-                F.col("freq").cast("double")
-                / (F.col("freq").cast("double") + F.col("norm_val"))
-            ),
-        )
+        scored_postings(tables, weights, k1, b, "double")
         .groupBy("doc_id")
         .agg(F.sum("term_score").alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))

@@ -17,8 +17,9 @@ Pinned contract: score(doc) = Σ_t boost_t · idf(df_blend) · tf_t/(tf_t
 Plan shape: one tiny dictionary scan for the expansion (driver gets
 ≤ maxExpansions (term, df, ed) rows — the dictionary is partitioned and
 pruned the same way every multi-term query prunes it), then the
-standard broadcast-weights posting scan; cost scales with the expanded
-terms' postings, never the corpus.
+standard scorer relation (scoring.scored_postings) over the expanded
+terms' postings with the blended weights; cost scales with those
+postings, never the corpus.
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions import bm25
 from ..functions.editdist import damerau_levenshtein
+from .scoring import empty_scores, scored_postings
 
 __all__ = ["fuzzy_scored"]
 
@@ -50,10 +52,6 @@ def fuzzy_scored(
     (score desc, doc_id asc). precision="double" is the ANSI-SQL-
     reproducible path; "float32" replicates Lucene's cast points.
     """
-    spark = tables.postings.sparkSession
-    num_type = "double" if precision == "double" else "float"
-    empty = spark.createDataFrame([], f"doc_id long, score {num_type}")
-
     cand = tables.dictionary
     if prefix_length > 0:
         cand = cand.filter(F.col("term").startswith(query[:prefix_length]))
@@ -70,7 +68,7 @@ def fuzzy_scored(
         if boost > 0.0:
             expanded.append((r["term"], int(r["df"]), boost))
     if not expanded:
-        return empty
+        return empty_scores(tables.dictionary.sparkSession, precision)
     # TopTermsRewrite queue order: boost desc, boost ties broken by
     # term bytes ONLY — the lexicographically smaller term wins, never
     # by docFreq (TopTermsRewrite.java:116-118)
@@ -84,42 +82,18 @@ def fuzzy_scored(
             np.log(1.0 + (np.float64(n) - df_blend + 0.5) / (df_blend + 0.5))
         )
         weights = [(t, bst * idf) for t, _, bst in expanded]
-        from .scoring import double_norm_cache
-
-        cache = double_norm_cache(
-            tables.sum_total_term_freq, tables.doc_count, k1, b
-        )
     else:
         idf32 = bm25.idf(df_blend, n)
         weights = [
             (t, float(np.float32(np.float32(bst) * idf32)))
             for t, _, bst in expanded
         ]
-        avgdl32 = bm25.avgdl(tables.sum_total_term_freq, n)
-        cache = bm25.norm_cache(avgdl32, np.float32(k1), np.float32(b))
-
-    weights_df = spark.createDataFrame(weights, f"term string, weight {num_type}")
-    cache_df = spark.createDataFrame(
-        [(i, float(cache[i])) for i in range(256)],
-        f"norm_byte int, norm_val {num_type}",
-    )
-    tf = F.col("freq").cast("double") / (
-        F.col("freq").cast("double") + F.col("norm_val").cast("double")
-    )
-    if precision != "double":
-        tf = tf.cast("float")
-    scored = (
-        tables.postings.filter(
-            F.col("term").isin([t for t, _ in weights])
-        )
-        .join(F.broadcast(weights_df), "term")
-    )
-    scored = scored.join(F.broadcast(cache_df), "norm_byte").withColumn(
-        "term_score", F.col("weight") * tf
-    )
     agg = F.sum(F.col("term_score").cast("double"))
     if precision != "double":
         agg = agg.cast("float")
-    out = scored.groupBy("doc_id").agg(agg.alias("score"))
-    out = out.orderBy(F.desc("score"), F.asc("doc_id"))
+    out = (
+        scored_postings(tables, weights, k1, b, precision)
+        .groupBy("doc_id").agg(agg.alias("score"))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+    )
     return out.limit(k) if k is not None else out

@@ -38,13 +38,12 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import bm25
 from ..index import codec
-from .scoring import term_weights
+from .scoring import empty_frame, norm_cache, term_weights
 
 __all__ = ["search_phrase", "LEAF_COLUMNS"]  # + span-near via ordered=False
 
@@ -180,7 +179,7 @@ def search_phrase(
     (the /export analog), otherwise the top-k.
 
     precision: "float32" (Lucene-exact cast points) or "double" (full
-    double math, ANSI-SQL-reproducible — see scoring.score_components).
+    double math, ANSI-SQL-reproducible — see scoring.norm_cache).
     """
     slot_terms = [
         tuple(t) if isinstance(t, (list, tuple)) else (t,) for t in terms
@@ -272,15 +271,10 @@ def _span_env(index, df_by_term, idf_terms, boost, k1, b, precision):
             df_by_term, index.doc_count, idf_terms, boost, k1, b, precision
         )
     )
+    cache = norm_cache(index.sum_total_term_freq, index.doc_count, k1, b, precision)
     if precision == "double":
-        from .scoring import double_norm_cache
-
-        cache = double_norm_cache(
-            index.sum_total_term_freq, index.doc_count, k1, b
-        )
         return np.float64(raw), cache
-    avgdl = bm25.avgdl(index.sum_total_term_freq, max(index.doc_count, 1))
-    return np.float32(raw), bm25.norm_cache(avgdl, np.float32(k1), np.float32(b))
+    return np.float32(raw), cache
 
 
 def _run_span(
@@ -307,8 +301,6 @@ def _run_span(
     required inputs. ``idf_terms`` (default ``needed``) keeps duplicates.
     Returns DataFrame(doc_id long, <freq_col> long, score) ordered by
     (score desc, doc_id asc), the top-k unless ``k`` is None."""
-    from ..operators.hashing import h60_py
-
     if not getattr(index, "has_positions", False):
         raise ValueError(
             "index was built without positions "
@@ -321,21 +313,13 @@ def _run_span(
     df_by_term = index.lookup_df(needed)
     present = [t for t in needed if t in df_by_term]
     if not present or not all(any(t in df_by_term for t in alts) for alts in req):
-        # a local Arrow relation: building and collecting it run no job
-        empty = pa.schema([
-            ("doc_id", pa.int64()), (freq_col, pa.int64()),
-            ("score", pa.float64() if double else pa.float32()),
-        ]).empty_table()
-        return index.blocks.sparkSession.createDataFrame(empty, schema)
+        return empty_frame(index.blocks.sparkSession, schema)
     w_sum, cache = _span_env(
         index, df_by_term,
         [t for t in (needed if idf_terms is None else idf_terms) if t in df_by_term],
         boost, k1, b, precision,
     )
-    buckets = sorted({h60_py(t) % index.n_buckets for t in present})
-    blocks = index.blocks.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(present)
-    ).select(*LEAF_COLUMNS)
+    blocks = index.blocks_of(present).select(*LEAF_COLUMNS)
 
     def leaf(pdf: pd.DataFrame) -> pd.DataFrame:
         pts = {t: _PosTerm(g) for t, g in pdf.groupby("term")}

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import bm25
 from .executor import _like_pattern
 from .phrase import search_phrase
-from .scoring import score_components
+from .scoring import empty_scores, scored_postings, term_weights
 
 __all__ = ["parse_surround", "execute_surround"]
 
@@ -275,9 +275,9 @@ def execute_surround(
     the query uses W/N. precision="double" keeps every score in ANSI-
     SQL-reproducible double math (the gate-oracle path)."""
     ast = parse_surround(query)
-    spark = tables.postings.sparkSession
+    spark = tables.dictionary.sparkSession
     score_type = "double" if precision == "double" else "float"
-    empty = spark.createDataFrame([], f"doc_id long, score {score_type}")
+    empty = empty_scores(spark, precision)
 
     def _an(t: str) -> str | None:
         toks = analyzer(t) if analyzer else [t.lower()]
@@ -316,18 +316,14 @@ def execute_surround(
 
     scoring = None
     if leaf_terms:
-        weights_df, cache_df, _n = score_components(
-            spark, tables, leaf_terms, 1.0, bm25.K1, bm25.B, precision
+        weights = term_weights(
+            tables.lookup_df(leaf_terms), tables.doc_count, leaf_terms, 1.0,
+            bm25.K1, bm25.B, precision,
         )
-        tf = F.col("freq").cast("double") / (
-            F.col("freq").cast("double") + F.col("norm_val").cast("double")
-        )
-        if precision != "double":
-            tf = tf.cast("float")
-        scoring = tables.postings.join(F.broadcast(weights_df), "term")
-        scoring = scoring.join(F.broadcast(cache_df), "norm_byte").select(
-            "doc_id", "term",
-            (F.col("weight") * tf).cast("double").alias("term_score"),
+        scoring = scored_postings(
+            tables, weights, bm25.K1, bm25.B, precision
+        ).select(
+            "doc_id", "term", F.col("term_score").cast("double").alias("term_score")
         )
 
     def slot_of(node) -> tuple:

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import bm25
+from .scoring import empty_scores, with_tf
 
 __all__ = ["TermAutomaton", "term_automaton_search"]
 
@@ -171,23 +172,16 @@ def term_automaton_search(
         {t for s in seqs for t in s if t != ANY}
     )
     if not seqs or not real_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_scores(spark, "double")
 
     # Σ idf over the distinct real terms present in the dictionary
     # (TermAutomatonWeight: one scorer over allTermStats; BM25's
     # multi-stats idf is the sum; absent terms contribute nothing).
     n = max(int(tables.doc_count), 1)
-    rows = (
-        tables.dictionary.filter(F.col("term").isin(real_terms))
-        .select("term", "df")
-        .collect()
-    )
-    idf_sum = sum(
-        math.log(1.0 + (n - int(r["df"]) + 0.5) / (int(r["df"]) + 0.5))
-        for r in rows
-    )
-    if not rows:
-        return spark.createDataFrame([], "doc_id long, score double")
+    dfs = tables.lookup_df(real_terms).values()
+    idf_sum = sum(math.log(1.0 + (n - df + 0.5) / (df + 0.5)) for df in dfs)
+    if not dfs:
+        return empty_scores(spark, "double")
 
     toks = tokens.filter(F.col("term").isin(real_terms)).select(
         "doc_id", "pos", "term"
@@ -212,27 +206,13 @@ def term_automaton_search(
         counts = c if counts is None else counts.unionByName(c)
     freqs = counts.groupBy("doc_id").agg(F.sum("c").alias("freq"))
 
-    from .scoring import double_norm_cache
-
-    cache = double_norm_cache(
-        tables.sum_total_term_freq, tables.doc_count, k1, b
-    )
-    cache_df = spark.createDataFrame(
-        [(i, float(cache[i])) for i in range(256)],
-        "norm_byte int, norm_val double",
-    )
     out = (
-        freqs.join(tables.norms.select("doc_id", "norm_byte"), "doc_id")
-        .join(F.broadcast(cache_df), "norm_byte")
+        with_tf(
+            freqs.join(tables.norms.select("doc_id", "norm_byte"), "doc_id"),
+            tables, k1, b, "double",
+        )
         .select(
-            "doc_id",
-            (
-                F.lit(float(boost) * idf_sum)
-                * (
-                    F.col("freq").cast("double")
-                    / (F.col("freq").cast("double") + F.col("norm_val"))
-                )
-            ).alias("score"),
+            "doc_id", (F.lit(float(boost) * idf_sum) * F.col("tf_score")).alias("score")
         )
         .orderBy(F.desc("score"), F.asc("doc_id"))
     )

@@ -68,7 +68,7 @@ from pyspark.sql import types as T
 
 from ..functions import bm25
 from ..index import codec
-from .scoring import term_weights
+from .scoring import norm_cache, term_weights
 
 __all__ = ["search_wand", "IN_PROCESS_MAX_POSTINGS", "LEAF_COLUMNS"]
 
@@ -384,8 +384,7 @@ def search_wand(
     n_present = len(weights)
     if n_present == 0 or (mode == "conjunctive" and n_present < len(uniq)):
         return _local_result(spark)
-    avgdl = bm25.avgdl(index.sum_total_term_freq, max(index.doc_count, 1))
-    cache = bm25.norm_cache(avgdl, np.float32(k1), np.float32(b))
+    cache = norm_cache(index.sum_total_term_freq, index.doc_count, k1, b)
 
     def topk(tbl: pa.Table):
         return _leaf_topk(
@@ -402,13 +401,6 @@ def search_wand(
         docs, scores = topk(pa.Table.from_pandas(pdf, preserve_index=False))
         return pd.DataFrame({"doc_id": docs, "score": scores})
 
-    # partition pruning: term_bucket dirs of the query terms only,
-    # computed driver-side (h60 is the portable md5 hash — no Spark job)
-    from ..operators.hashing import h60_py  # local: avoid cycle
-
-    buckets = sorted({h60_py(t) % index.n_buckets for t in weights})
-    blocks = index.blocks.filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(list(weights))
-    ).select(*LEAF_COLUMNS)
+    blocks = index.blocks_of(list(weights)).select(*LEAF_COLUMNS)
     local = blocks.groupBy("seg_group").applyInPandas(leaf, schema=_RESULT_SCHEMA)
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions import bm25
 from .executor import execute_parsed
 from .phrase import search_phrase, span_first, span_not, span_or
-from .scoring import score_components
+from .scoring import empty_scores, scored_postings, term_weights
 
 __all__ = ["execute_xml"]
 
@@ -85,9 +85,9 @@ def execute_xml(
     except ET.ParseError as exc:  # ParserException contract
         raise ValueError(f"xml query parse error: {exc}") from None
 
-    spark = tables.postings.sparkSession
+    spark = tables.dictionary.sparkSession
     score_type = "double" if precision == "double" else "float"
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    empty = empty_scores(spark, "double")
 
     def _an(t: str) -> list:
         return analyzer(t) if analyzer else [t.lower()]
@@ -106,18 +106,14 @@ def execute_xml(
     collect(root)
     scoring = None
     if leaf_terms:
-        weights_df, cache_df, _n = score_components(
-            spark, tables, leaf_terms, 1.0, bm25.K1, bm25.B, precision
+        weights = term_weights(
+            tables.lookup_df(leaf_terms), tables.doc_count, leaf_terms, 1.0,
+            bm25.K1, bm25.B, precision,
         )
-        tf = F.col("freq").cast("double") / (
-            F.col("freq").cast("double") + F.col("norm_val").cast("double")
-        )
-        if precision != "double":
-            tf = tf.cast("float")
-        scoring = tables.postings.join(F.broadcast(weights_df), "term")
-        scoring = scoring.join(F.broadcast(cache_df), "norm_byte").select(
-            "doc_id", "term",
-            (F.col("weight") * tf).cast("double").alias("term_score"),
+        scoring = scored_postings(
+            tables, weights, bm25.K1, bm25.B, precision
+        ).select(
+            "doc_id", "term", F.col("term_score").cast("double").alias("term_score")
         )
 
     def term_frame(t: str, w: float) -> DataFrame:

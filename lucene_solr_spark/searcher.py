@@ -154,9 +154,7 @@ class Searcher:
                     # MUST_NOT still excludes under mm (ReqExclScorer):
                     # anti-join the prohibited terms' doc set, then
                     # re-apply the top-k cut
-                    excl = self.index.postings.filter(
-                        self.index.postings.term.isin(list(p.must_not))
-                    ).select("doc_id")
+                    excl = self.index.postings_of(p.must_not).select("doc_id")
                     hits = hits.join(excl, "doc_id", "left_anti").orderBy(
                         F.desc("score"), F.asc("doc_id")
                     )

@@ -581,7 +581,7 @@ def test_span_family_randomized_vs_brute(spark, tmp_path_factory):
     from lucene_solr_spark.search.phrase import (
         span_first, span_not, span_position_range,
     )
-    from lucene_solr_spark.search.scoring import double_norm_cache, term_weights
+    from lucene_solr_spark.search.scoring import norm_cache, term_weights
 
     n_docs, n_tokens = len(toks), sum(len(d) for d in toks.values())
     assert (idx.doc_count, idx.sum_total_term_freq) == (n_docs, n_tokens)
@@ -642,13 +642,7 @@ def test_span_family_randomized_vs_brute(spark, tmp_path_factory):
          lambda d: not_near(d, 2, 1)),
     ]
     for precision in ("double", "float32"):
-        if precision == "double":
-            cache = double_norm_cache(n_tokens, n_docs, bm25.K1, bm25.B)
-        else:
-            cache = bm25.norm_cache(
-                bm25.avgdl(n_tokens, n_docs), np.float32(bm25.K1),
-                np.float32(bm25.B),
-            )
+        cache = norm_cache(n_tokens, n_docs, bm25.K1, bm25.B, precision)
         for freq_col, idf_terms, run, brute in cases:
             rows = run(precision).collect()
             want = {d: n for d in toks if (n := brute(d))}

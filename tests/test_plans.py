@@ -305,17 +305,57 @@ def test_edismax_broadcasts_weights_no_norms_shuffle(spark, tiny_index):
     assert df.count() > 0
 
 
+def _assert_reads_only_term_blocks(df):
+    """After running ``df``, its block scan reads only the query terms'
+    term_bucket directories and has the term filter pushed into it."""
+    df.collect()
+    assert "term_bucket" in " ".join(partition_filters(df))
+    assert "term" in " ".join(pushed_filters(df))
+
+
 def test_fuzzy_scored_broadcasts_and_filters_terms(spark, tiny_index):
     """The blended fuzzy query's weight/cache joins broadcast — no
-    shuffle join anywhere. (Scan pushdown is asserted by the parquet-
-    backed tests above; the fixture index's postings are decoded from
-    its blocks by a MapInArrow, so the term filter applies above the
-    decode, not in the scan.)"""
+    shuffle join anywhere — and the expanded terms' postings are decoded
+    from their blocks only: the block scan prunes to their term_bucket
+    directories and pushes the term filter."""
     from lucene_solr_spark.search.fuzzyq import fuzzy_scored
 
     df = fuzzy_scored(tiny_index, "vinza", max_edits=1, k=10)
     assert set(join_strategies(df)) == {"BroadcastHashJoin"}
     assert df.count() > 0
+    _assert_reads_only_term_blocks(df)
+
+
+def test_bruteforce_reads_only_query_term_blocks(spark, tiny_index):
+    """search_bruteforce over a SegmentedIndex decodes only its terms'
+    blocks: a filter above the postings decode cannot reach the scan, so
+    the scorer asks the index for ``postings_of(terms)``."""
+    from lucene_solr_spark.search.bruteforce import search_bruteforce
+
+    _assert_reads_only_term_blocks(
+        search_bruteforce(tiny_index, ["vinza", "lanso"], "disjunctive", 10)
+    )
+
+
+def test_relational_scorer_calls_run_no_job(spark, tiny_index):
+    """The relational scorers look their terms' df up on the driver:
+    building a search_bruteforce plan launches no Spark job, and an
+    absent-term search_bruteforce or edismax returns a local empty
+    result whose collect() launches none either."""
+    from lucene_solr_spark.search.bruteforce import search_bruteforce
+    from lucene_solr_spark.search.edismax import edismax
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+    before = store.jobsList(None).size()
+    present = search_bruteforce(tiny_index, ["vinza", "kidivacor"], k=10)
+    absent = [
+        search_bruteforce(tiny_index, ["zzznotaterm"], k=10),
+        search_bruteforce(tiny_index, ["zzznotaterm"], k=10, precision="double"),
+        edismax({"body": tiny_index}, ["zzznotaterm"], qf={}),
+    ]
+    assert [df.collect() for df in absent] == [[], [], []]
+    assert store.jobsList(None).size() == before
+    assert absent[0].schema == present.schema
 
 
 def test_word_breaks_broadcasts_candidates(spark, tiny_index):

@@ -9,9 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.splitter import (
+    filter_index,
     multi_pass_index_splitter,
     pk_index_splitter,
 )
+from lucene_solr_spark.search.multireader import multi_reader
 
 SF = "/root/testdata/sf0.001"
 
@@ -150,3 +152,28 @@ def test_merge_indexes_rejects_sparse_shard(make_index, spark):
         merge_indexes([sparse, sparse])
     with pytest.raises(ValueError):
         merge_indexes([])
+
+
+def test_postings_of_and_lookup_df_match_the_relations(spark, parent):
+    """Every index kind answers a query's reads like its relations:
+    ``postings_of(terms)`` is ``postings`` filtered to the terms (as a
+    multiset) and ``lookup_df(terms)`` is their dictionary rows — on the
+    SegmentedIndex (pruned block decode, driver-side lookup), a split
+    part and a two-shard multi-reader."""
+    from collections import Counter
+
+    _, tables = parent
+    head = [r["term"] for r in tables.dictionary.orderBy(F.desc("df")).limit(2).collect()]
+    indexes = {
+        "segmented": tables,
+        "split": filter_index(tables, F.col("doc_id") % 3 == 1),
+        "multi_reader": multi_reader([tables, tables]),
+    }
+    for name, ix in indexes.items():
+        for terms in ([head[0], head[1], head[0], "zzznotaterm"], []):
+            want = ix.postings.filter(F.col("term").isin(terms)).collect()
+            got = ix.postings_of(terms).collect()
+            assert Counter(map(tuple, got)) == Counter(map(tuple, want)), name
+            assert bool(got) == bool(terms), name
+            rows = ix.dictionary.filter(F.col("term").isin(terms)).collect()
+            assert ix.lookup_df(terms) == {r["term"]: r["df"] for r in rows}, name
